@@ -213,8 +213,10 @@ def big_index_latency(spark, sf_dir: str, replicate: int) -> tuple[dict, dict, i
         build_index(spark, docs, idx, n_segments=1, n_shards=32)
         reader = IndexReader(spark, idx)
         reader.open_serving()
-        per_query, stats = _timed_queries(spark, reader, BIG_HEADLINE)
-        reader.close_serving()
+        try:
+            per_query, stats = _timed_queries(spark, reader, BIG_HEADLINE)
+        finally:
+            reader.close_serving()  # releases the residency and restores AQE
         return per_query, stats, n_docs
     finally:
         shutil.rmtree(idx, ignore_errors=True)

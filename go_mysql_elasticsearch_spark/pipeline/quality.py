@@ -25,7 +25,7 @@ projection (they run inside the scan, like pii_scrub).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..analyzer import tokens_col
@@ -41,15 +41,20 @@ def unigram_perplexity(docs: DataFrame) -> DataFrame:
     # ONE plan, no cache (r6, ADVICE r5: the cached counts frame leaked
     # into executor memory for the session lifetime — unpersist had no
     # safe place because the returned frame still referenced it). The
-    # corpus total now rides each vocab row via an unpartitioned window
-    # SUM over the vocabulary agg — vocab-sized, evaluated inside the
-    # same plan, so there is no separate driver action to leak a cache
-    # for and the vocabulary aggregation still runs exactly once.
+    # corpus total is a 1-row SUM over the vocabulary agg, broadcast and
+    # cross-joined onto every vocab row: no driver action to leak a
+    # cache for, and no unpartitioned window that would pull the whole
+    # vocabulary into a single task. Both branches read the same
+    # vocabulary shuffle (exchange reuse), so the agg still runs once;
+    # that needs identical subtrees, hence the explicit not-null filter
+    # the join would otherwise infer on one side only (tokens are never
+    # null, so it drops nothing).
     counts = (
-        toks.groupBy("term")
+        toks.where(F.col("term").isNotNull())
+        .groupBy("term")
         .agg(F.count(F.lit(1)).cast("double").alias("c"))
-        .withColumn("_total", F.sum("c").over(Window.partitionBy()))
     )
+    counts = counts.crossJoin(F.broadcast(counts.agg(F.sum("c").alias("_total"))))
     scored = toks.join(counts, "term").select(
         "doc_id", (F.log(F.col("c") / F.col("_total"))).alias("lp")
     )

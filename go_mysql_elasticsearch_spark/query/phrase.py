@@ -348,7 +348,6 @@ def _positional_hits(
 
     if "pos_vb" not in reader.postings().columns:
         return None
-    empty = spark.createDataFrame([], "doc_id long, raw double")
     tids_map = term_ids(spark, list(dict.fromkeys(chain_words + score_words)))
     # df lookup covers the PREFIX-expansion tids too: their postings are
     # pulled by the tid IN filter below, so they must count toward the
@@ -358,7 +357,7 @@ def _positional_hits(
     chain_tids = [tids_map[w] for w in chain_words]
     score_tids = list(dict.fromkeys(tids_map[w] for w in score_words))
     if any(t not in dfs for t in chain_tids + score_tids):
-        return empty
+        return spark.createDataFrame([], "doc_id long, raw double")
     n, avgdl = reader.n_docs, reader.avgdl
     idfs = {t: _idf(n, d) for t, d in dfs.items()}
     st = getattr(reader, "settings", {})
@@ -386,10 +385,9 @@ def _positional_hits(
     # mapInPandas work widened it). Match queries keep the byte-estimate
     # rule: their driver kernel over the resident copy is still the
     # fastest path at coordinator-friendly sizes.
-    serving_open = reader.postings() is getattr(reader, "_serving", None)
     use_driver = not big_tombs and (
         strategy == "driver"
-        or (strategy == "auto" and not serving_open
+        or (strategy == "auto" and not reader.serving_open
             and est_bytes <= DRIVER_PATH_MAX_BYTES)
     )
     if use_driver:
@@ -420,9 +418,13 @@ def _positional_hits(
             # in Spark over the surviving handful.
             kth = np.partition(hits["raw"].to_numpy(), -topk)[-topk]
             hits = hits[hits["raw"].to_numpy() >= kth - 10.0 ** (-ROUND_DIGITS)]
-        return spark.createDataFrame(hits, schema="doc_id long, raw double")
+        # one partition: the hits are driver-local, and a single-partition
+        # child lets the caller's global sort run without a range-partition
+        # exchange (a sampling job plus a shuffle whenever the optimizer
+        # drops the limit because the hits already fit in k)
+        return spark.createDataFrame(hits, schema="doc_id long, raw double").coalesce(1)
     schema = "doc_id long, raw double"
-    if reader.postings() is getattr(reader, "_serving", None) and not big_tombs:
+    if reader.serving_open and not big_tombs:
         # Serving residency open (r6, mirrors wand.bm25_topk): cached
         # partitions hold complete (segment, shard) groups, so the
         # shard loop runs inside ONE mapInPandas call per partition —

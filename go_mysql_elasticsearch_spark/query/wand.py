@@ -54,6 +54,14 @@ _INF = np.iinfo(np.int64).max
 _TOPK_SCHEMA = StructType(
     [StructField("doc_id", LongType()), StructField("raw", DoubleType())]
 )
+_RESULT_SCHEMA = "doc_id long, score double"
+
+
+def _empty_result(spark: SparkSession) -> DataFrame:
+    """Zero-hit result. Built only on the branch that returns it: each
+    ``createDataFrame`` costs driver time even when unused."""
+    return spark.createDataFrame([], _RESULT_SCHEMA)
+
 
 # Block-decode telemetry: blocks SEEN by cursors vs blocks actually
 # DECODED. The gap is block-max WAND's value proposition (skipped
@@ -266,15 +274,20 @@ _TID_CACHE: dict[str, int] = {}
 
 
 def term_ids(spark: SparkSession, terms: list[str]) -> dict[str, int]:
-    """term → xxhash64 tid, exactly as the build computes it (a tiny
-    driver-local job on literals; memoized per term)."""
+    """term → xxhash64 tid, exactly as the build's ``F.xxhash64(term)``
+    computes it: Spark's own XXH64 (seed 42, the expression's default)
+    over the term's UTF-8 bytes, called through the JVM gateway — no
+    Spark job. Memoized per term."""
     missing = [t for t in terms if t not in _TID_CACHE]
     if missing:
-        row = spark.range(1).select(
-            *[F.xxhash64(F.lit(t)).alias(f"h{i}") for i, t in enumerate(missing)]
-        ).collect()[0]
-        for i, t in enumerate(missing):
-            _TID_CACHE[t] = row[f"h{i}"]
+        jvm = spark.sparkContext._jvm
+        # the instance form: py4j cannot pick the static overload when
+        # an instance method shares its name
+        xxh = jvm.org.apache.spark.sql.catalyst.expressions.XXH64(42)
+        offset = jvm.org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
+        for t in missing:
+            raw = t.encode("utf-8")
+            _TID_CACHE[t] = xxh.hashUnsafeBytes(raw, offset, len(raw))
     return {t: _TID_CACHE[t] for t in terms}
 
 
@@ -495,14 +508,13 @@ def _bm25_topk_batch_distributed(
     idfs = {t: _idf(n, d) for t, d in dfs.items()}
     big_tombs = reader.tombstones_count() > reader.TOMBSTONE_DICT_MAX
     dead_upto = {} if big_tombs else reader.tombstones_map()
-    empty = spark.createDataFrame([], "doc_id long, score double")
 
     per_spec = []  # (qid, q_tids, mode, n_terms) — only specs that can hit
     results: list[DataFrame | None] = []
     for qid, (terms, mode) in enumerate(specs):
         q_tids = [tids[t] for t in terms if tids.get(t) in dfs]
         if not q_tids or (mode == "and" and len(q_tids) < len(terms)):
-            results.append(empty)
+            results.append(_empty_result(spark))
         else:
             per_spec.append((qid, q_tids, mode, len(terms)))
             results.append(None)
@@ -557,9 +569,7 @@ def _bm25_topk_batch_distributed(
         if r is None:
             rows = by_qid.get(i)
             results[i] = (
-                spark.createDataFrame(rows, "doc_id long, score double")
-                if rows
-                else empty
+                spark.createDataFrame(rows, _RESULT_SCHEMA) if rows else _empty_result(spark)
             )
     return results
 
@@ -588,9 +598,8 @@ def bm25_topk_batch(
 
     specs = [(_analyze(q), mode) for q, mode in queries]
     all_terms = list(dict.fromkeys(t for terms, _ in specs for t in terms))
-    empty = spark.createDataFrame([], "doc_id long, score double")
     if not all_terms:
-        return [empty for _ in specs]
+        return [_empty_result(spark) for _ in specs]
     tids = term_ids(spark, all_terms)
     dfs = reader.df_lookup(list(tids.values()))
     big_tombs = reader.tombstones_count() > reader.TOMBSTONE_DICT_MAX
@@ -617,7 +626,7 @@ def bm25_topk_batch(
     for terms, mode in specs:
         q_tids = [tids[t] for t in terms if tids.get(t) in dfs]
         if not q_tids or (mode == "and" and len(q_tids) < len(terms)):
-            outs.append(empty)
+            outs.append(_empty_result(spark))
             continue
         sub = pdf[pdf["tid"].isin(q_tids)]
         hits = _score_matched_driver(
@@ -626,7 +635,7 @@ def bm25_topk_batch(
         hits["score"] = hits["raw"].round(ROUND_DIGITS)
         hits = hits.sort_values(["score", "doc_id"], ascending=[False, True]).head(k)
         out_pdf = hits[["doc_id", "score"]].astype({"doc_id": "int64", "score": "float64"})
-        outs.append(spark.createDataFrame(out_pdf, schema="doc_id long, score double"))
+        outs.append(spark.createDataFrame(out_pdf, schema=_RESULT_SCHEMA))
     return outs
 
 
@@ -655,13 +664,12 @@ def bm25_topk(
         else list(dict.fromkeys(query))
     )
     n_terms = len(terms)
-    empty = spark.createDataFrame([], "doc_id long, score double")
     if not terms:
-        return empty
+        return _empty_result(spark)
     tids = term_ids(spark, terms)
     dfs = reader.df_lookup(list(tids.values()))
     if not dfs or (mode == "and" and len(dfs) < n_terms):
-        return empty
+        return _empty_result(spark)
     n, avgdl = reader.n_docs, reader.avgdl
     idfs = {t: _idf(n, d) for t, d in dfs.items()}
     # Tombstone strategy: small delete sets ride the scorer closure as a
@@ -695,9 +703,9 @@ def bm25_topk(
         if not return_all:
             hits = hits.head(k)
         out_pdf = hits[["doc_id", "score"]].astype({"doc_id": "int64", "score": "float64"})
-        return spark.createDataFrame(out_pdf, schema="doc_id long, score double")
+        return spark.createDataFrame(out_pdf, schema=_RESULT_SCHEMA)
 
-    if reader.postings() is getattr(reader, "_serving", None) and not big_tombs:
+    if reader.serving_open and not big_tombs:
         # Serving residency open (r6): every cached partition holds
         # COMPLETE (segment, shard) groups (the residency's hash
         # repartition is the guarantee), so the shard grouping can run

@@ -170,6 +170,19 @@ def test_cms_sketch_single_scan(spark):
     assert "partial_count" in s or "HashAggregate" in s, s
 
 
+def test_perplexity_total_is_broadcast_not_single_partition_window(spark):
+    """The corpus token total must not come from an unpartitioned window
+    (it pulls the whole vocabulary into one task): it is a broadcast
+    1-row sum, read off the same vocabulary shuffle as the counts."""
+    from go_mysql_elasticsearch_spark.pipeline.quality import unigram_perplexity
+
+    df = unigram_perplexity(spark.read.parquet(f"{SF_SMALL}/documents.parquet"))
+    df.collect()
+    s = plan_of(df)
+    assert "Window" not in s, s
+    assert "ReusedExchange" in s, s
+
+
 def test_windowed_counts_partial_agg_before_shuffle(spark):
     """The windowed agg must combine map-side: state/shuffle bounded by
     (window × event_type), never by event rows."""
