@@ -11,13 +11,18 @@ scale-killer). Scoring is the BM25 sum of the constituent terms, as ES
 does for phrases without slop boosts; ranking contract as everywhere:
 round 6, (score DESC, doc_id ASC).
 
-Execution shape (mirrors wand.py):
-1. driver-side: analyze → tids → df/idf lookups (tiny dictionary).
-2. ``postings.where(tid.isin(q))`` — pruned scan INCLUDING pos_vb.
-3. per (segment, shard) group: decode sub-lists, AND-intersect doc
-   sets, chain-verify positions (pos(w0) ∩ pos(w1)-1 ∩ ...), score
-   survivors. Same driver/distributed cutover as wand (byte estimate).
-4. global deterministic ORDER BY + LIMIT k.
+Execution shape: ``_positional_hits`` analyzes, hashes and looks up
+df/idf on the driver, binds the query into ONE positional kernel
+(``_make_positional_scorer``) and runs it on wand's query executor
+(``wand._execute``), over ``postings.where(tid.isin(q))`` INCLUDING
+pos_vb. The executor's four routes are the match query's —
+resident-driver, pull-driver, residency ``mapInPandas`` and the
+``groupBy(segment, shard).applyInPandas`` fallback — with one phrase
+policy: ``auto`` takes the residency whenever serving is open. Per
+(segment, shard) group the kernel decodes the sub-lists, AND-intersects
+doc sets, chain-verifies positions (pos(w0) ∩ pos(w1)-1 ∩ ...) and
+scores survivors; the caller then takes the global deterministic
+ORDER BY + LIMIT k.
 """
 
 from __future__ import annotations
@@ -29,13 +34,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import wand
 from ..analyzer import TOKEN_PATTERN
 from ..index.codec import unpack_blocks_batch, unpack_positions_batch
 from ..index.reader import IndexReader
 from .scoring import ROUND_DIGITS, idf as _idf, tfpart
 
 _TOK = re.compile(TOKEN_PATTERN)
-_EMPTY = pd.DataFrame({"doc_id": pd.Series(dtype="int64"), "raw": pd.Series(dtype="float64")})
+# the columns the positional kernel reads
+_PHRASE_COLS = ["segment", "shard", "tid", "first_doc_id", "docs_vb", "tfs_vb", "dls_vb", "pos_vb"]
 
 
 def _in_sorted(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -66,63 +73,39 @@ POS_DECODE_STATS = {"decoded": 0, "blocks": 0}
 
 
 class _TidPostings:
-    """One term's postings within a group: docs/tfs/dls batch-decoded
-    up front (the intersection and scoring need them); POSITION
-    payloads decode LAZILY, only for the blocks that hold candidate
-    postings — decode cost ∝ candidate blocks, not the term's df.
+    """One term's postings within one (segment, shard) group:
+    docs/tfs/dls batch-decoded up front (the intersection and scoring
+    need them); POSITION payloads decode LAZILY, only for the blocks
+    that hold candidate postings — decode cost ∝ candidate blocks, not
+    the term's df. Within a group the blocks, taken in first_doc_id
+    order, are disjoint ascending doc runs, so the decoded ``docs`` are
+    sorted and posting indexes are block-order indexes."""
 
-    Groups may span SHARDS (r6: the driver path scores per SEGMENT so
-    each term decodes in one vectorized pass instead of n_shards tiny
-    ones — guide §1.2 per-task work): shard sub-lists interleave in
-    doc space, so when the block-order doc array is not globally
-    sorted a stable permutation exposes sorted ``docs/tfs/dls`` views
-    while position decode keeps operating in block space (``_perm``
-    translates posting indexes; per-(segment, shard) groups are
-    already sorted and skip the permutation entirely)."""
-
-    __slots__ = ("docs", "tfs", "dls", "_pos_bufs", "_nper", "_bstarts",
-                 "_perm", "_tfs_b")
+    __slots__ = ("docs", "tfs", "dls", "_pos_bufs", "_nper", "_bstarts")
 
     def __init__(self, g: pd.DataFrame):
         order = np.argsort(g["first_doc_id"].to_numpy())
-        gd, gt, gl = (g["docs_vb"].to_numpy()[order], g["tfs_vb"].to_numpy()[order],
-                      g["dls_vb"].to_numpy()[order])
         # ONE vectorized varbyte pass per column over the whole
         # sub-list (delta resets at block boundaries)
-        d, t, l, nper = unpack_blocks_batch(gd, gt, gl)
-        docs_b = d.astype(np.int64)
-        tfs_b = t.astype(np.int64)
-        self._tfs_b = tfs_b  # block-order tfs: position-slice lengths
-        if docs_b.size and not np.all(docs_b[1:] >= docs_b[:-1]):
-            perm = np.argsort(docs_b, kind="stable")
-            self._perm = perm
-            self.docs = docs_b[perm]
-            self.tfs = tfs_b[perm]
-            self.dls = l.astype(np.int64)[perm]
-        else:
-            self._perm = None
-            self.docs = docs_b
-            self.tfs = tfs_b
-            self.dls = l.astype(np.int64)
+        d, t, l, nper = unpack_blocks_batch(
+            g["docs_vb"].to_numpy()[order], g["tfs_vb"].to_numpy()[order],
+            g["dls_vb"].to_numpy()[order],
+        )
+        self.docs = d.astype(np.int64)
+        self.tfs = t.astype(np.int64)
+        self.dls = l.astype(np.int64)
         self._pos_bufs = g["pos_vb"].to_numpy()[order]
         self._nper = nper
         self._bstarts = np.cumsum(nper) - nper  # first posting idx per block
         POS_DECODE_STATS["blocks"] += len(self._pos_bufs)
 
-    def idx_of(self, doc_ids: np.ndarray) -> np.ndarray:
-        """Posting indexes of the given doc_ids (must all be present)."""
-        return np.searchsorted(self.docs, doc_ids)
-
     def positions_for(self, pidx: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Positions of the requested posting indexes (in the sorted
-        ``docs`` space): ``(flat, lens)`` where posting ``pidx[i]``
-        owns the next ``lens[i]`` values of ``flat``. Decodes ONLY the
-        blocks the requests fall in — one batched varbyte pass over
-        that subset."""
+        """Positions of the requested posting indexes: ``(flat, lens)``
+        where posting ``pidx[i]`` owns the next ``lens[i]`` values of
+        ``flat``. Decodes ONLY the blocks the requests fall in — one
+        batched varbyte pass over that subset."""
         if pidx.size == 0:
             return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-        if self._perm is not None:
-            pidx = self._perm[pidx]  # → block-space posting indexes
         blocks = np.searchsorted(self._bstarts, pidx, side="right") - 1
         need = np.unique(blocks)
         n_blocks = len(self._pos_bufs)
@@ -130,13 +113,13 @@ class _TidPostings:
             # dense candidates: the subset bookkeeping costs more than
             # it saves — decode the whole sub-list in one pass
             POS_DECODE_STATS["decoded"] += n_blocks
-            flat, offs_all = unpack_positions_batch(self._pos_bufs, self._tfs_b)
+            flat, offs_all = unpack_positions_batch(self._pos_bufs, self.tfs)
             flat = flat.astype(np.int64)
             offs, loc = offs_all, pidx
         else:
             POS_DECODE_STATS["decoded"] += int(need.size)
             tf_slices = [
-                self._tfs_b[self._bstarts[b]: self._bstarts[b] + self._nper[b]] for b in need
+                self.tfs[self._bstarts[b]: self._bstarts[b] + self._nper[b]] for b in need
             ]
             tfs_cat = np.concatenate(tf_slices)
             flat, _ = unpack_positions_batch([self._pos_bufs[b] for b in need], tfs_cat)
@@ -148,7 +131,7 @@ class _TidPostings:
                 [np.arange(self._bstarts[b], self._bstarts[b] + self._nper[b]) for b in need]
             )
             loc = np.searchsorted(gidx, pidx)
-        lens = self._tfs_b[pidx]
+        lens = self.tfs[pidx]
         total = int(lens.sum())
         if total == 0:
             return np.empty(0, dtype=np.int64), lens
@@ -157,56 +140,52 @@ class _TidPostings:
                   + np.repeat(offs[loc], lens))
         return flat[gather], lens
 
-    def positions(self, i: int) -> np.ndarray:
-        flat, _lens = self.positions_for(np.array([i], dtype=np.int64))
-        return flat
-
 
 def _make_positional_scorer(
     chain_tids: list[int],
     score_tids: list[int],
     idfs: dict[int, float],
     avgdl: float,
-    dead_upto: dict[int, int],
     k1: float,
     b: float,
     prefix_tids: frozenset[int] | None = None,
     slop: int = 0,
 ):
-    """Group scorer: verify the position chain ``chain_tids`` (tid of
-    the phrase word at each offset) and, for phrase_prefix, require some
-    ``prefix_tids`` member adjacent after the chain. ``slop`` is the
-    Lucene/ES TOTAL move budget (SloppyPhraseMatcher semantics): a doc
-    matches iff some window [w, w+slop] contains an offset-adjusted
-    position (pos - word_offset) of every phrase word — so transposed
-    words match at slop>=2 and 'a x x b x x c' needs slop>=4 for
-    'a b c' (NOT per-gap slack). slop=0 is exact adjacency. Survivors
-    score Σ idf·tfpart over ``score_tids``."""
+    """The phrase kernel, ``kernel(pdf, dead_upto) -> (doc_id, raw)``:
+    per (segment, shard) group, verify the position chain
+    ``chain_tids`` (tid of the phrase word at each offset) and, for
+    phrase_prefix, require some ``prefix_tids`` member adjacent after
+    the chain. ``slop`` is the Lucene/ES TOTAL move budget
+    (SloppyPhraseMatcher semantics): a doc matches iff some window
+    [w, w+slop] contains an offset-adjusted position (pos - word_offset)
+    of every phrase word — so transposed words match at slop>=2 and
+    'a x x b x x c' needs slop>=4 for 'a b c' (NOT per-gap slack).
+    slop=0 is exact adjacency. Survivors score Σ idf·tfpart over
+    ``score_tids``.
+
+    Per-(segment, shard) on every route (r6): segment-level grouping
+    was measured SLOWER in an interleaved A/B (557 ms vs 488 ms for
+    qb_phrase) — the chain-verify intersect costs grow superlinearly
+    with group size and dominate the saved per-group dispatch."""
     from ..analyzer import BM25_B, BM25_K1
 
     k1 = BM25_K1 if k1 is None else k1
     b = BM25_B if b is None else b
     need = list(dict.fromkeys(chain_tids + score_tids))
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(pdf["segment"].iloc[0])
-        sent = pdf["tid"].to_numpy() == -1
-        dead = frozenset(d for d, u in dead_upto.items() if seg <= u)
-        if sent.any():
-            dead = dead | frozenset(pdf.loc[sent, "first_doc_id"].astype("int64"))
-            pdf = pdf[~sent]
+    def score_group(pdf: pd.DataFrame, dead: frozenset):
         data = {int(tid): _TidPostings(g) for tid, g in pdf.groupby("tid")}
         if any(t not in data for t in need):
-            return _EMPTY
+            return None
         cand = data[need[0]].docs
         for t in need[1:]:
             cand = cand[_in_sorted(cand, data[t].docs)]
         if prefix_tids and not any(t in data for t in prefix_tids):
-            return _EMPTY
+            return None
         if dead and cand.size:
             cand = cand[~np.isin(cand, np.fromiter(dead, dtype=np.int64))]
         if cand.size == 0:
-            return _EMPTY
+            return None
 
         # Vectorized chain verify over ALL candidates at once. Key
         # trick: (candidate index << 32 | position) packs (doc, pos)
@@ -242,11 +221,11 @@ def _make_positional_scorer(
         surv = window_cover(keyed_positions(data[chain_tids[0]]), 0)
         for j in range(1, m):
             if surv.size == 0:
-                return _EMPTY
+                return None
             surv = surv[_in_sorted(surv, window_cover(keyed_positions(data[chain_tids[j]]), j))]
         if prefix_tids is not None:
             if surv.size == 0:
-                return _EMPTY
+                return None
             exp_keys = np.concatenate(
                 [keyed_positions(data[t]) for t in prefix_tids if t in data]
             )
@@ -257,7 +236,7 @@ def _make_positional_scorer(
                 cover = np.sort(cover)
             surv = surv[_in_sorted(surv, cover)]
         if surv.size == 0:
-            return _EMPTY
+            return None
         hit_idx = np.unique(surv >> 32)
         if slop > 0 and len(set(chain_tids)) != len(chain_tids):
             # Repeated phrase words: the window cover above lets ONE
@@ -311,7 +290,7 @@ def _make_positional_scorer(
                 (doc_matches(i) for i in range(hit_idx.size)), dtype=bool, count=hit_idx.size
             )]
             if hit_idx.size == 0:
-                return _EMPTY
+                return None
         hit_docs = cand[hit_idx]
 
         raw = np.zeros(hit_docs.size, dtype=np.float64)
@@ -321,10 +300,18 @@ def _make_positional_scorer(
             raw += idfs[t] * tfpart(
                 tp.tfs[pidx].astype(np.float64), tp.dls[pidx].astype(np.float64), avgdl, k1, b
             )
-        return pd.DataFrame({"doc_id": pd.Series(hit_docs, dtype="int64"),
-                             "raw": pd.Series(raw, dtype="float64")})
+        return hit_docs, raw
 
-    return score_group
+    def kernel(pdf: pd.DataFrame, dead_upto: dict[int, int]) -> pd.DataFrame:
+        docs, raws = [], []
+        for g, dead in wand._live_groups(pdf, dead_upto, ["segment", "shard"]):
+            hit = score_group(g, dead)
+            if hit is not None:
+                docs.append(hit[0])
+                raws.append(hit[1])
+        return wand._hits_frame(docs, raws)
+
+    return kernel
 
 
 def _positional_hits(
@@ -341,107 +328,61 @@ def _positional_hits(
     (+optional prefix continuation), scored over score_words. Returns
     None when the index predates positional payloads (legacy fallback).
     Empty-result short-circuits return an empty frame. ``strategy``
-    mirrors bm25_topk: 'auto' (byte-estimate cutover), 'driver',
-    'distributed' — the forced paths exist so both serving shapes are
-    benchmarked per round (qb_phrase / qb_phrase_dist)."""
-    from .wand import DRIVER_PATH_MAX_BYTES, term_ids
-
+    mirrors bm25_topk: 'auto', 'driver', 'distributed' — the forced
+    paths exist so both serving shapes are benchmarked per round
+    (qb_phrase / qb_phrase_dist)."""
     if "pos_vb" not in reader.postings().columns:
         return None
-    tids_map = term_ids(spark, list(dict.fromkeys(chain_words + score_words)))
+    tids_map = wand.term_ids(spark, list(dict.fromkeys(chain_words + score_words)))
     # df lookup covers the PREFIX-expansion tids too: their postings are
-    # pulled by the tid IN filter below, so they must count toward the
-    # driver-path byte estimate (a high-df prefix could otherwise drag
+    # pulled by the tid IN filter, so they must count toward the
+    # driver-route byte estimate (a high-df prefix could otherwise drag
     # far more than DRIVER_PATH_MAX_BYTES onto the driver)
     dfs = reader.df_lookup(list(tids_map.values()) + list(prefix_tids or []))
     chain_tids = [tids_map[w] for w in chain_words]
     score_tids = list(dict.fromkeys(tids_map[w] for w in score_words))
     if any(t not in dfs for t in chain_tids + score_tids):
-        return spark.createDataFrame([], "doc_id long, raw double")
-    n, avgdl = reader.n_docs, reader.avgdl
-    idfs = {t: _idf(n, d) for t, d in dfs.items()}
+        return spark.createDataFrame([], wand._HITS_SCHEMA)
+    idfs = {t: _idf(reader.n_docs, d) for t, d in dfs.items()}
     st = getattr(reader, "settings", {})
-    k1, b = st.get("bm25_k1"), st.get("bm25_b")
-
-    big_tombs = reader.tombstones_count() > reader.TOMBSTONE_DICT_MAX
-    dead_upto = {} if big_tombs else reader.tombstones_map()
-    all_tids = list(dict.fromkeys(chain_tids + score_tids + list(prefix_tids or [])))
-    matched = reader.postings().where(F.col("tid").isin(all_tids)).select(
-        "segment", "shard", "tid", "first_doc_id", "docs_vb", "tfs_vb", "dls_vb", "pos_vb"
-    )
-    if big_tombs:
-        matched = matched.unionByName(reader.dead_sentinel_rows(), allowMissingColumns=True)
-    scorer = _make_positional_scorer(
-        chain_tids, score_tids, idfs, avgdl, dead_upto, k1, b,
+    kernel = _make_positional_scorer(
+        chain_tids, score_tids, idfs, reader.avgdl, st.get("bm25_k1"), st.get("bm25_b"),
         frozenset(prefix_tids) if prefix_tids else None, slop,
     )
+    all_tids = list(dict.fromkeys(chain_tids + score_tids + list(prefix_tids or [])))
     est_bytes = sum(dfs.get(t, 0) for t in all_tids) * reader.bytes_per_posting
-    # auto is residency-aware for PHRASE (r6): with a serving session
-    # open, the shard-parallel path wins — positional chain verification
-    # parallelizes across partitions with zero Exchange and no per-query
-    # Sort, while the driver path decodes positions single-threaded
-    # (640k-doc tier, same window: distributed 0.23 s vs driver 0.41 s;
-    # r5 BASELINE recorded the same direction at 0.96x before the r6
-    # mapInPandas work widened it). Match queries keep the byte-estimate
-    # rule: their driver kernel over the resident copy is still the
-    # fastest path at coordinator-friendly sizes.
-    use_driver = not big_tombs and (
-        strategy == "driver"
-        or (strategy == "auto" and not reader.serving_open
-            and est_bytes <= DRIVER_PATH_MAX_BYTES)
-    )
-    if use_driver:
-        from .wand import _driver_matched
+    # residency_first (r6): with a serving session open, the
+    # shard-parallel route wins for PHRASE — positional chain
+    # verification parallelizes across partitions with zero Exchange
+    # and no per-query Sort, while the driver routes decode positions
+    # single-threaded (640k-doc tier, same window: distributed 0.23 s vs
+    # driver 0.41 s). Match queries keep the byte-estimate rule: their
+    # kernel over the resident copy is still the fastest route at
+    # coordinator-friendly sizes.
+    hits = wand._execute(spark, reader, all_tids, _PHRASE_COLS, kernel, est_bytes, strategy,
+                         residency_first=True)
+    if isinstance(hits, DataFrame):
+        return hits
+    if topk is not None and len(hits) > topk:
+        # prune to the top-k raw band BEFORE shipping rows back into
+        # Spark (a head-term phrase can match 10^4-10^5 docs; only
+        # ~k survive the final sort). The cut keeps everything
+        # within rounding slack of the k-th raw score, so the exact
+        # (round HALF_UP, doc_id) ordering — which numpy cannot
+        # reproduce bit-for-bit (banker's rounding) — still happens
+        # in Spark over the surviving handful.
+        kth = np.partition(hits["raw"].to_numpy(), -topk)[-topk]
+        hits = hits[hits["raw"].to_numpy() >= kth - 10.0 ** (-ROUND_DIGITS)]
+    # one partition: the hits are driver-local, and a single-partition
+    # child lets the caller's global sort run without a range-partition
+    # exchange (a sampling job plus a shuffle whenever the optimizer
+    # drops the limit because the hits already fit in k)
+    return spark.createDataFrame(hits, schema=wand._HITS_SCHEMA).coalesce(1)
 
-        pdf = _driver_matched(
-            reader, all_tids,
-            ["segment", "shard", "tid", "first_doc_id",
-             "docs_vb", "tfs_vb", "dls_vb", "pos_vb"],
-        )
-        if pdf is None:
-            pdf = matched.toPandas()
-        # NOTE (r6): segment-level grouping was tried here (one scorer
-        # call per segment, _TidPostings tolerating shard-mixed doc
-        # order) and measured SLOWER in an interleaved A/B (557 ms vs
-        # 488 ms for qb_phrase) — the chain-verify np.isin/intersect
-        # costs grow superlinearly with group size and dominate the
-        # saved per-group dispatch. Per-(segment, shard) stays.
-        frames = [scorer(g) for _, g in pdf.groupby(["segment", "shard"], sort=False)]
-        hits = pd.concat(frames, ignore_index=True) if frames else _EMPTY
-        if topk is not None and len(hits) > topk:
-            # prune to the top-k raw band BEFORE shipping rows back into
-            # Spark (a head-term phrase can match 10^4-10^5 docs; only
-            # ~k survive the final sort). The cut keeps everything
-            # within rounding slack of the k-th raw score, so the exact
-            # (round HALF_UP, doc_id) ordering — which numpy cannot
-            # reproduce bit-for-bit (banker's rounding) — still happens
-            # in Spark over the surviving handful.
-            kth = np.partition(hits["raw"].to_numpy(), -topk)[-topk]
-            hits = hits[hits["raw"].to_numpy() >= kth - 10.0 ** (-ROUND_DIGITS)]
-        # one partition: the hits are driver-local, and a single-partition
-        # child lets the caller's global sort run without a range-partition
-        # exchange (a sampling job plus a shuffle whenever the optimizer
-        # drops the limit because the hits already fit in k)
-        return spark.createDataFrame(hits, schema="doc_id long, raw double").coalesce(1)
-    schema = "doc_id long, raw double"
-    if reader.serving_open and not big_tombs:
-        # Serving residency open (r6, mirrors wand.bm25_topk): cached
-        # partitions hold complete (segment, shard) groups, so the
-        # shard loop runs inside ONE mapInPandas call per partition —
-        # no per-query local Sort, no per-group Arrow framing. The
-        # scorer itself is unchanged (still sees one group at a time).
-        def part_score(batches):
-            parts = [p for p in batches if len(p)]
-            if not parts:
-                return
-            pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-            for _, g in pdf.groupby(["segment", "shard"], sort=False):
-                out = scorer(g)
-                if len(out):
-                    yield out
 
-        return matched.mapInPandas(part_score, schema=schema)
-    return matched.groupBy("segment", "shard").applyInPandas(scorer, schema=schema)
+def _top(hits: DataFrame, k: int) -> DataFrame:
+    out = hits.select("doc_id", F.round("raw", ROUND_DIGITS).alias("score"))
+    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def match_phrase(
@@ -451,15 +392,14 @@ def match_phrase(
     pattern = getattr(reader, "settings", {}).get("token_pattern", TOKEN_PATTERN)
     words = phrase_words(phrase, pattern)
     if not words:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return wand._empty_result(spark)
     hits = _positional_hits(spark, reader, words, list(dict.fromkeys(words)), slop=slop,
                             topk=k, strategy=strategy)
     if hits is None:  # legacy index without positions: docstore verify
         if slop:
             raise NotImplementedError("slop requires a positional index")
         return _match_phrase_docstore(spark, reader, words, k, pattern)
-    out = hits.select("doc_id", F.round("raw", ROUND_DIGITS).alias("score"))
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _top(hits, k)
 
 
 def match_phrase_prefix(
@@ -478,44 +418,30 @@ def match_phrase_prefix(
     ranks independent of which expansion matched."""
     pattern = getattr(reader, "settings", {}).get("token_pattern", TOKEN_PATTERN)
     words = phrase_words(phrase, pattern)
-    empty = spark.createDataFrame([], "doc_id long, score double")
     if not words:
-        return empty
-    if len(words) == 1:
-        # ES degrades a one-term match_phrase_prefix to a plain prefix
-        # query on that term (ADVICE r2): multi-term rewrite, constant
-        # score 1.0, served from the dictionary + pruned postings scan
-        exp = (
-            reader.term_strings()
-            .where(F.col("term").startswith(words[0]))
-            .orderBy(F.asc("term"))
-            .limit(max_expansions)
-            .select("tid")
-            .collect()
-        )
-        if not exp:
-            return empty
-        docs = reader.term_doc_ids([r["tid"] for r in exp]).select("doc_id").distinct()
-        return docs.select("doc_id", F.lit(1.0).alias("score")).orderBy(F.asc("doc_id")).limit(k)
-    full, prefix = words[:-1], words[-1]
-    exp = (
-        reader.term_strings()
-        .where(F.col("term").startswith(prefix))
+        return wand._empty_result(spark)
+    exp = [
+        r["tid"]
+        for r in reader.term_strings()
+        .where(F.col("term").startswith(words[-1]))
         .orderBy(F.asc("term"))
         .limit(max_expansions)
         .select("tid")
         .collect()
-    )
+    ]
     if not exp:
-        return empty
-    hits = _positional_hits(
-        spark, reader, full, list(dict.fromkeys(full)),
-        prefix_tids=[r["tid"] for r in exp], topk=k,
-    )
+        return wand._empty_result(spark)
+    if len(words) == 1:
+        # ES degrades a one-term match_phrase_prefix to a plain prefix
+        # query on that term (ADVICE r2): multi-term rewrite, constant
+        # score 1.0, served from the dictionary + pruned postings scan
+        docs = reader.term_doc_ids(exp).select("doc_id").distinct()
+        return docs.select("doc_id", F.lit(1.0).alias("score")).orderBy(F.asc("doc_id")).limit(k)
+    full = words[:-1]
+    hits = _positional_hits(spark, reader, full, list(dict.fromkeys(full)), prefix_tids=exp, topk=k)
     if hits is None:
         raise NotImplementedError("phrase_prefix requires a positional index")
-    out = hits.select("doc_id", F.round("raw", ROUND_DIGITS).alias("score"))
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _top(hits, k)
 
 
 def phrase_doc_filter(
