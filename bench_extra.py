@@ -7,7 +7,8 @@ attributable. Numbers are cited in OPTIMIZATION_r06.md.
 Probes:
   python bench_extra.py build-phases C [repeats]
       One warmed JVM at local[C]; per-phase build walls (docstore /
-      postings / term_dict) printed per repeat, best-of summary.
+      postings / term_dict, read from each segment manifest's
+      ``phases``) printed per repeat, best-of summary.
   python bench_extra.py queries [n_parts]
       Small-index headline latency + big-index latency with a serving
       residency of n_parts partitions (0 = reader default).
@@ -48,7 +49,6 @@ def _replicated_docs(spark, sf_dir, r, parts=64):
 
 
 def build_phases(cores: int, repeats: int = 3) -> None:
-    os.environ["SPARK_GRAFT_BUILD_TIMING"] = "1"
     from go_mysql_elasticsearch_spark.index.build import build_index
     from go_mysql_elasticsearch_spark.session import get_spark
 
@@ -57,20 +57,22 @@ def build_phases(cores: int, repeats: int = 3) -> None:
     docs, n_docs = _replicated_docs(spark, SF_DIR, REPLICATE)
     docs = docs.cache()
     docs.count()
-    walls = []
+    walls, phases = [], []
     for i in range(repeats):
         idx = tempfile.mkdtemp(prefix=f"phase_idx_{cores}_")
         try:
             t0 = time.time()
-            build_index(spark, docs, idx, n_segments=1, n_shards=32)
+            manifests = build_index(spark, docs, idx, n_segments=1, n_shards=32)
             w = time.time() - t0
             walls.append(w)
-            print(f"[repeat {i}] wall={w:.3f}s", file=sys.stderr)
+            phases.append(manifests[0]["phases"])
+            print(f"[repeat {i}] wall={w:.3f}s phases={phases[-1]}", file=sys.stderr)
         finally:
             shutil.rmtree(idx, ignore_errors=True)
     print(json.dumps({"cores": cores, "n_docs": n_docs,
                       "wall_best": round(min(walls), 3),
                       "walls": [round(w, 3) for w in walls],
+                      "phases_best": phases[walls.index(min(walls))],
                       "docs_per_sec": round(n_docs / min(walls), 1)}))
 
 

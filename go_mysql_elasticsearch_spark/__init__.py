@@ -13,6 +13,8 @@ implements only the genuinely novel parts (posting-block codec,
 block-max WAND, skew salting) as vectorized Arrow UDFs.
 """
 
+import sys
+
 __version__ = "0.1.0"
 
 
@@ -33,9 +35,10 @@ def _guard_zipimport_invalidation() -> None:
     exactly the condition under which the cached directory is still
     valid. A changed or vanished zip still re-reads eagerly.
 
-    Applied at package import, so the driver and every Python worker
-    that unpickles this engine's functions (the import happens on the
-    worker's first task) are covered from their next task onward.
+    Applied at package import on CPython < 3.12 only, so the driver
+    and every Python worker that unpickles this engine's functions (the
+    import happens on the worker's first task) are covered from their
+    next task onward.
     """
     import os
     import zipimport
@@ -46,8 +49,6 @@ def _guard_zipimport_invalidation() -> None:
     orig = zi.invalidate_caches
 
     def invalidate_caches(self):
-        if os.environ.get("SPARK_GRAFT_NO_ZIPGUARD"):
-            return orig(self)  # escape hatch (A/B measurement, paranoia)
         try:
             st = os.stat(self.archive)
             key = (st.st_mtime_ns, st.st_size)
@@ -66,4 +67,5 @@ def _guard_zipimport_invalidation() -> None:
         pass
 
 
-_guard_zipimport_invalidation()
+if sys.version_info < (3, 12):
+    _guard_zipimport_invalidation()

@@ -10,83 +10,6 @@ non-SQL-expressible ops).
 from __future__ import annotations
 
 
-# Entries the driver gate has NOT yet recorded (its budget cuts off after
-# the first 50 registry keys). They run FIRST so every operator gets hard
-# driver-side credit at least once. Round-6 rotation: r5 recorded the
-# then-new/changed block, so those keys drop to the tail; the head is
-# now the two entries whose engine internals changed this optimization
-# round, then the keys whose latest driver credit is round 1/2.
-# (The 4 fixed bm25_* keys registered ahead of this list in
-# registry.build_queries occupy 4 of the driver's 50 slots — and they
-# exercise the round-6 scorer kernels directly.)
-_PRIORITY = [
-    # round-6 rotation: entries whose ENGINE internals changed this
-    # optimization round re-record first (results proven identical —
-    # the gate turns that proof into driver-side hard credit) ...
-    "quality_perplexity",
-    "stream_topk_cms",
-    # ... then the STALEST driver recordings (round-1/2 credit that
-    # r5's 50-key budget did not reach), in prior priority order
-    "function_score_decay",
-    "keyset_page",
-    "match_all",
-    "more_like_this",
-    "multi_match",
-    "sort_top",
-    "agg_percentile_ranks",
-    "agg_percentiles",
-    "agg_top_hits",
-    "ann_cosine_brute",
-    "bool_dis_max_nested",
-    "collapse",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "from_size",
-    "term_lang",
-    "terms_lang",
-    "range_nchars",
-    "range_ts",
-    "ids",
-    "exists_lang",
-    "prefix_terms",
-    "wildcard_terms",
-    "regexp_terms",
-    "fuzzy_terms",
-    "suggest_phrase",
-    "get_by_id",
-    "index_stats",
-    "indices_routing",
-    "suggest_completion",
-    "missing_lang",
-    "sort_script",
-    "sort_multi",
-    "sort_mode",
-    "function_score_fvf",
-    "function_score_weight",
-    "match_fuzzy",
-    "function_score_random",
-    "rescore",
-    "highlight",
-    "percolate",
-    "percolate_filtered",
-    "agg_sampler",
-    "pipeline_derivative",
-    "pipeline_cumulative_sum",
-    "pipeline_moving_avg",
-    "windowed_counts",
-    "agg_cardinality_hll",
-    "agg_terms_cms",
-    "pipeline_mov_avg_ewma",
-    "pipeline_mov_avg_holt",
-    "pipeline_serial_diff",
-    "pipeline_bucket_selector",
-    "pipeline_bucket_script",
-    "sessionize_events",
-    "pipeline_min_sum_bucket",
-]
-
-
 def all_entries() -> dict:
     from . import admin, aggs, compound, geo, pipeline_ops, relations, rowdoc, services, structured
 
@@ -96,9 +19,4 @@ def all_entries() -> dict:
         if overlap:
             raise ValueError(f"duplicate entry names: {overlap}")
         merged.update(mod.ENTRIES)
-    missing = [n for n in _PRIORITY if n not in merged]
-    if missing:
-        raise ValueError(f"priority entries not registered: {missing}")
-    out: dict = {n: merged[n] for n in _PRIORITY}
-    out.update({n: v for n, v in merged.items() if n not in out})
-    return out
+    return merged

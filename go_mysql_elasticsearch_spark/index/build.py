@@ -326,7 +326,7 @@ def build_segment(
     # ride through two shuffles and a sort (memory-bandwidth bound).
     # Query-side hashes its terms the same way; term *strings* are only
     # needed by dictionary-walking ops (prefix/wildcard/fuzzy), served
-    # by the lazily-built term_strings table (reader.term_strings()).
+    # from job 3's per-segment term_dict (reader.term_strings()).
     # 64-bit collisions are negligible below ~10^9 distinct terms.
     # posexplode keeps each occurrence's position. TOKEN rows go
     # straight into the co-locating shuffle — no (term, doc) pre-agg
@@ -421,16 +421,13 @@ def build_segment(
         "n_shards": n_shards,
         "block_size": block_size,
         "wall_time_sec": round(time.time() - t0, 3),
+        "phases": _timings,  # per-phase walls (s): docstore, postings, term_dict
         **(extra_manifest or {}),
     }
     tmp = manifest_path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=1)
     os.replace(tmp, manifest_path)  # atomic, like canal/master.go:71-90
-    if os.environ.get("SPARK_GRAFT_BUILD_TIMING"):
-        import sys
-
-        print(f"[build_segment {segment_id}] phases: {_timings}", file=sys.stderr)
     return manifest
 
 

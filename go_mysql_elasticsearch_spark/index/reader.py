@@ -4,6 +4,12 @@ postings / docstore / global term dictionary DataFrames.
 Only segments with a ``manifest.json`` are visible — an interrupted
 build's partial segment is invisible until its manifest lands (same
 contract as the reference's binlog checkpoint: canal/master.go:16-45).
+
+Format floor: a served segment must carry the manifest byte counters
+``n_postings`` / ``postings_bytes`` (v4, written together with the
+``pos_vb`` position payloads) and a build-time ``term_dict.parquet``
+(v5). ``IndexReader`` refuses any older segment when it opens, so the
+query path assumes those artifacts everywhere and has no fallbacks.
 """
 
 from __future__ import annotations
@@ -85,6 +91,17 @@ class IndexReader:
             ]
         if not self.manifests:
             raise FileNotFoundError(f"no completed segments under {index_dir}")
+        # the format floor (module docstring) — the one place that tests
+        # for these artifacts
+        for m, (seg_id, td) in zip(self.manifests, self._seg_paths("term_dict.parquet")):
+            missing = [k for k in ("n_postings", "postings_bytes") if k not in m]
+            if not os.path.exists(os.path.join(td, "_SUCCESS")):
+                missing.append("term_dict.parquet")
+            if missing:
+                raise ValueError(
+                    f"segment {seg_id} of {index_dir} predates the v5 segment format "
+                    f"(missing {', '.join(missing)}); rebuild the index from its source"
+                )
 
     # ---- global collection stats (cheap: from manifests, no scan) --------
     @property
@@ -100,12 +117,14 @@ class IndexReader:
     def bytes_per_posting(self) -> float:
         """Average packed bytes per posting across segments, from exact
         manifest counters — sizes the query-side driver-path decision in
-        BYTES pulled, not posting count. Indexes built before these
-        counters existed fall back to a conservative estimate (varbyte
-        doc-delta + tf + dl ≈ 6 B/posting for web-page docs)."""
-        n = sum(m.get("n_postings", 0) for m in self.manifests)
-        b = sum(m.get("postings_bytes", 0) for m in self.manifests)
-        return (b / n) if n and b else 6.0
+        BYTES pulled, not posting count (0.0 for an index without
+        postings)."""
+        n = sum(m["n_postings"] for m in self.manifests)
+        return self._postings_bytes / n if n else 0.0
+
+    @property
+    def _postings_bytes(self) -> int:
+        return sum(m["postings_bytes"] for m in self.manifests)
 
     def _seg_paths(self, name: str) -> list[tuple[str, str]]:
         return [
@@ -216,11 +235,8 @@ class IndexReader:
     SERVING_PART_BYTES = 4 * 1024 * 1024
 
     def _serving_parts(self) -> int:
-        total = sum(m.get("postings_bytes", 0) for m in self.manifests)
         para = self.spark.sparkContext.defaultParallelism
-        if not total:  # pre-v4 manifests lack byte counters
-            return para
-        return min(max(1, -(-total // self.SERVING_PART_BYTES)), 4 * para)
+        return min(max(1, -(-self._postings_bytes // self.SERVING_PART_BYTES)), 4 * para)
 
     # Above this many packed-postings bytes the driver-side serving copy
     # is refused and queries keep the pruned-scan pull path. An index
@@ -253,8 +269,7 @@ class IndexReader:
         if self._serving is None or self._driver_postings is False:
             return None
         if self._driver_postings is None:
-            total = sum(m.get("postings_bytes", 0) for m in self.manifests)
-            if not total or total > self.DRIVER_RESIDENT_MAX_BYTES:
+            if self._postings_bytes > self.DRIVER_RESIDENT_MAX_BYTES:
                 self._driver_postings = False
                 return None
             self._driver_postings = self._union("postings.parquet").toPandas()
@@ -398,56 +413,19 @@ class IndexReader:
         dictionary-walking ops (prefix/wildcard/regexp/fuzzy/suggest —
         reference surface §2.4).
 
-        Primary path (VERDICT r3 #5): every segment built since v5
-        ships a build-time ``term_dict.parquet`` side-output, so the
-        dictionary is the UNION of per-segment dicts merged by term —
-        no corpus re-tokenize, and the per-segment scans stay range-
-        sorted so a prefix filter pushes into each scan before the
-        merge agg (plan-asserted). df sums per-segment build-time
-        counts — Lucene semantics: tombstoned docs keep counting until
-        their segment merges away.
-
-        Fallback for pre-v5 segments: derive from the RAW stored fields
-        (one re-tokenize pass, NOT tombstone-filtered — same Lucene
-        convention as the build-time counts, so dictionary-walking ops
-        that rank by df — fuzzy/suggest/phrase-prefix — order
-        identically whatever the segment vintage; ADVICE r4) and cache
-        beside the segments, keyed by the live segment set so the cache
-        can never serve a stale dictionary after an incremental segment
-        lands."""
-        import hashlib as _hl
-        import os as _os
-
-        from ..analyzer import tokens_col
-
-        paths = [p for _sid, p in self._seg_paths("term_dict.parquet")]
-        if paths and all(_os.path.exists(_os.path.join(p, "_SUCCESS")) for p in paths):
-            per_seg = None
-            for p in paths:
-                d = self.spark.read.parquet(p)
-                per_seg = d if per_seg is None else per_seg.unionByName(d)
-            return per_seg.groupBy("term").agg(
-                F.sum("df").cast("long").alias("df"), F.first("tid").alias("tid")
-            ).select("term", "tid", "df")
-        # "dfv2": round-5 semantics change (raw-union df, Lucene
-        # convention) — salts the tag so caches computed under the old
-        # tombstone-filtered derivation rebuild instead of serving
-        # stale df values (code-review r5)
-        seg_key = ",".join(sorted(str(m["segment_id"]) for m in self.manifests)) + "|dfv2"
-        tag = _hl.sha1(seg_key.encode()).hexdigest()[:10]
-        p = _os.path.join(self.root, f"term_strings-{tag}.parquet")
-        if not _os.path.exists(_os.path.join(p, "_SUCCESS")):
-            terms = (
-                self._union("docs.parquet")
-                .select(F.explode(F.array_distinct(tokens_col("text"))).alias("term"))
-                .groupBy("term")
-                .agg(F.count(F.lit(1)).cast("long").alias("df"))
-                .withColumn("tid", F.xxhash64("term"))
-            )
-            terms.repartitionByRange("term").sortWithinPartitions("term").write.mode(
-                "overwrite"
-            ).parquet(p)
-        return self.spark.read.parquet(p)
+        The UNION of every segment's build-time ``term_dict.parquet``
+        merged by term — no corpus re-tokenize, and the per-segment
+        scans stay range-sorted so a prefix filter pushes into each scan
+        before the merge agg (plan-asserted). df sums per-segment
+        build-time counts — Lucene semantics: tombstoned docs keep
+        counting until their segment merges away."""
+        per_seg = None
+        for _sid, p in self._seg_paths("term_dict.parquet"):
+            d = self.spark.read.parquet(p)
+            per_seg = d if per_seg is None else per_seg.unionByName(d)
+        return per_seg.groupBy("term").agg(
+            F.sum("df").cast("long").alias("df"), F.first("tid").alias("tid")
+        ).select("term", "tid", "df")
 
     def df_lookup(self, tids: list[int]) -> dict[int, int]:
         """tid → document frequency, memoized driver-side.
@@ -510,7 +488,7 @@ class IndexReader:
         if t is None:
             return None
         segs = self.spark.createDataFrame(
-            [(int(m["segment_id"]), int(m.get("n_shards", 8))) for m in self.manifests],
+            [(int(m["segment_id"]), int(m["n_shards"])) for m in self.manifests],
             "seg int, n_shards int",
         )
         dead = t.crossJoin(F.broadcast(segs)).where(F.col("seg") <= F.col("upto_seg"))

@@ -117,10 +117,6 @@ def snapshot_index(index_dir: str, snap_dir: str) -> dict:
         os.path.join(snap_dir, "tombstones.parquet"),
         pinned,
     )
-    for extra in ("term_strings.parquet",):
-        src = os.path.join(root, extra)
-        if os.path.isdir(src):
-            shutil.copytree(src, os.path.join(snap_dir, extra), dirs_exist_ok=True)
     for f in ("settings.json",):
         for src_root in (root, index_dir):
             src = os.path.join(src_root, f)

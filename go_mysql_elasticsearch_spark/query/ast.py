@@ -222,12 +222,9 @@ def all_hits(spark: SparkSession, reader: IndexReader, q) -> DataFrame:
                          min_should=q.min_should, return_all=True)
     if isinstance(q, Phrase):
         words = phrase_words(q.text, getattr(reader, "settings", {}).get("token_pattern"))
-        hits = _positional_hits(spark, reader, words, list(dict.fromkeys(words)))
-        if hits is None:
-            from .phrase import match_phrase
-
-            return match_phrase(spark, reader, q.text, k=10**9)
-        return hits.select("doc_id", F.round("raw", ROUND_DIGITS).alias("score"))
+        return _positional_hits(spark, reader, words, list(dict.fromkeys(words))).select(
+            "doc_id", F.round("raw", ROUND_DIGITS).alias("score")
+        )
     if isinstance(q, MatchAll):
         return reader.docstore().select("doc_id", F.lit(float(q.boost)).alias("score"))
     if isinstance(q, (Term, Terms, Range, Exists, Ne)):

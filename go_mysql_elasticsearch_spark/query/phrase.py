@@ -323,16 +323,14 @@ def _positional_hits(
     slop: int = 0,
     topk: int | None = None,
     strategy: str = "auto",
-) -> DataFrame | None:
+) -> DataFrame:
     """Shared engine: DataFrame(doc_id, raw) of docs matching the chain
-    (+optional prefix continuation), scored over score_words. Returns
-    None when the index predates positional payloads (legacy fallback).
+    (+optional prefix continuation), scored over score_words. Every
+    served segment carries ``pos_vb`` (the reader's format floor).
     Empty-result short-circuits return an empty frame. ``strategy``
     mirrors bm25_topk: 'auto', 'driver', 'distributed' — the forced
     paths exist so both serving shapes are benchmarked per round
     (qb_phrase / qb_phrase_dist)."""
-    if "pos_vb" not in reader.postings().columns:
-        return None
     tids_map = wand.term_ids(spark, list(dict.fromkeys(chain_words + score_words)))
     # df lookup covers the PREFIX-expansion tids too: their postings are
     # pulled by the tid IN filter, so they must count toward the
@@ -393,13 +391,8 @@ def match_phrase(
     words = phrase_words(phrase, pattern)
     if not words:
         return wand._empty_result(spark)
-    hits = _positional_hits(spark, reader, words, list(dict.fromkeys(words)), slop=slop,
-                            topk=k, strategy=strategy)
-    if hits is None:  # legacy index without positions: docstore verify
-        if slop:
-            raise NotImplementedError("slop requires a positional index")
-        return _match_phrase_docstore(spark, reader, words, k, pattern)
-    return _top(hits, k)
+    return _top(_positional_hits(spark, reader, words, list(dict.fromkeys(words)), slop=slop,
+                                 topk=k, strategy=strategy), k)
 
 
 def match_phrase_prefix(
@@ -438,46 +431,15 @@ def match_phrase_prefix(
         docs = reader.term_doc_ids(exp).select("doc_id").distinct()
         return docs.select("doc_id", F.lit(1.0).alias("score")).orderBy(F.asc("doc_id")).limit(k)
     full = words[:-1]
-    hits = _positional_hits(spark, reader, full, list(dict.fromkeys(full)), prefix_tids=exp, topk=k)
-    if hits is None:
-        raise NotImplementedError("phrase_prefix requires a positional index")
-    return _top(hits, k)
-
-
-def phrase_doc_filter(
-    spark: SparkSession, reader: IndexReader, words: list[str]
-) -> DataFrame | None:
-    """doc_ids containing the exact phrase — the query_string phrase
-    constraint, served from positional postings (None on legacy
-    indexes)."""
-    hits = _positional_hits(spark, reader, words, [])
-    return None if hits is None else hits.select("doc_id")
-
-
-# --- legacy (pre-positional) fallback --------------------------------------
-
-def phrase_match_expr(toks_col: str, words: list[str]):
-    """JVM expression: token array contains the word sequence adjacently
-    (docstore-verify fallback for indexes without pos_vb)."""
-    m = len(words)
-    c = toks_col
-    conds = " AND ".join(f"{c}[i+{j}] = '{w}'" for j, w in enumerate(words))
-    return F.expr(f"size({c}) >= {m} AND exists(sequence(0, size({c}) - {m}), i -> {conds})")
-
-
-def _match_phrase_docstore(spark, reader, words, k, pattern):
-    from ..analyzer import tokens_col
-    from .wand import bm25_topk
-
-    uniq = list(dict.fromkeys(words))
-    candidates = bm25_topk(spark, reader, uniq, k=k, mode="and", return_all=True)
-    docs = reader.docstore().select("doc_id", tokens_col("text", pattern=pattern).alias("__pt"))
-    verified = (
-        candidates.join(docs, "doc_id")
-        .where(phrase_match_expr("__pt", words))
-        .select("doc_id", "score")
+    return _top(
+        _positional_hits(spark, reader, full, list(dict.fromkeys(full)), prefix_tids=exp, topk=k), k
     )
-    return verified.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def phrase_doc_filter(spark: SparkSession, reader: IndexReader, words: list[str]) -> DataFrame:
+    """doc_ids containing the exact phrase — the query_string phrase
+    constraint, served from positional postings."""
+    return _positional_hits(spark, reader, words, []).select("doc_id")
 
 
 def phrase_prefix_oracle_sql(
@@ -547,12 +509,3 @@ SELECT doc_id, round(raw, {ROUND_DIGITS}) AS score FROM sc
 WHERE matched = {len(uniq)} AND doc_id IN (SELECT doc_id FROM phrase_docs)
 ORDER BY round(raw, {ROUND_DIGITS}) DESC, doc_id ASC LIMIT {k}""".strip()
 
-
-def duckdb_phrase_docs_sql(words: list[str]) -> str:
-    """DuckDB CTE body selecting doc_ids containing the phrase (1-based lists)."""
-    m = len(words)
-    conds = " AND ".join(f"t[i+{j}] = '{w}'" for j, w in enumerate(words))
-    return (
-        f"SELECT DISTINCT doc_id FROM toks, unnest(range(1, len(t) - {m} + 2)) AS u(i) "
-        f"WHERE len(t) >= {m} AND {conds}"
-    )

@@ -99,37 +99,8 @@ def query_string_topk(spark, reader, q: str, k: int = 10):
                 member.where(F.col("tid") == tmap[t]).select("doc_id"), "doc_id", "left_anti"
             )
     for p in pq.phrases:
-        pf = phrase_doc_filter(spark, reader, p)
-        if pf is None:  # legacy index without positions
-            return _query_string_docstore(spark, reader, pq, k)
-        out = out.join(pf, "doc_id", "left_semi")
+        out = out.join(phrase_doc_filter(spark, reader, p), "doc_id", "left_semi")
     out = out.select("doc_id", F.round("score", ROUND_DIGITS).alias("score"))
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def _query_string_docstore(spark, reader, pq: ParsedQuery, k: int = 10):
-    """Pre-positional fallback: verify constraints against docstore
-    tokens (full corpus re-tokenize — legacy indexes only)."""
-    from pyspark.sql import functions as F
-
-    from ..analyzer import tokens_col
-    from .phrase import phrase_match_expr
-    from .scoring import ROUND_DIGITS
-    from .wand import bm25_topk
-
-    scored = bm25_topk(spark, reader, pq.positive_terms, k=k, mode="or", return_all=True)
-    docs = reader.docstore().select("doc_id", tokens_col("text").alias("__qt"))
-    cond = F.lit(True)
-    for t in pq.must:
-        cond = cond & F.array_contains("__qt", t)
-    for t in pq.must_not:
-        cond = cond & ~F.array_contains("__qt", t)
-    for p in pq.phrases:
-        cond = cond & phrase_match_expr("__qt", p)
-    keep = docs.where(cond).select("doc_id")
-    out = scored.join(keep, "doc_id", "left_semi").select(
-        "doc_id", F.round("score", ROUND_DIGITS).alias("score")
-    )
     return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 

@@ -382,10 +382,10 @@ _MATCH_COLS = [
 def _driver_matched(reader: IndexReader, tids: list[int], cols: list[str]):
     """Matched postings sliced from the serving session's driver-side
     residency (reader.driver_postings) — zero Spark jobs — or None when
-    no serving copy is held (closed serving / over the byte cap /
-    pre-counter manifests). Same rows, same columns, same dtypes as the
-    ``matched.toPandas()`` pull it replaces; only the transport differs
-    (measured: ~60 ms fixed per-query job overhead eliminated)."""
+    no serving copy is held (closed serving / over the byte cap). Same
+    rows, same columns, same dtypes as the ``matched.toPandas()`` pull
+    it replaces; only the transport differs (measured: ~60 ms fixed
+    per-query job overhead eliminated)."""
     dp = reader.driver_postings()
     if dp is None:
         return None

@@ -157,11 +157,6 @@ def build_queries() -> dict:
         full, prefix = _PHRASE_PREFIX_FIXTURE
         return match_phrase_prefix(spark, index_for(spark, sf_dir), " ".join(full) + " " + prefix, k=10)
 
-    # Ordering matters: the driver's correctness gate has a per-round
-    # budget (round 1 recorded exactly the first 50 keys). The flagship
-    # match query + entries with no recorded driver result yet
-    # (all_entries puts its _PRIORITY block first) run before the
-    # already-recorded round-1 fixtures.
     def _slop(spark: SparkSession, sf_dir: str) -> DataFrame:
         return match_phrase(spark, index_for(spark, sf_dir), _PHRASE_FIXTURE, k=10, slop=2)
 

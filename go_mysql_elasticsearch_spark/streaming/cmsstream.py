@@ -79,19 +79,21 @@ def cms_stream_sketch(
     stream. NOTE: a durable checkpoint only makes the SOURCE resumable;
     the accumulator starts empty each call, so reusing a checkpoint
     whose files were already processed yields a partial sketch — this
-    guard raises instead of returning one silently."""
-    import os
+    guard raises instead of returning one silently. The check resolves
+    the checkpoint through Hadoop's FileSystem, as the stream itself
+    does, so ``file://``, ``hdfs://`` and ``s3://`` checkpoints are
+    guarded like local paths."""
     import shutil
     import tempfile
 
-    if checkpoint_dir is not None and os.path.exists(
-        os.path.join(checkpoint_dir, "sources")
-    ):
-        raise ValueError(
-            "checkpoint_dir has prior stream progress; the fresh "
-            "CmsAccumulator would silently miss already-processed files "
-            "— use a new checkpoint, or persist/merge the prior sketch"
-        )
+    if checkpoint_dir is not None:
+        sources = spark._jvm.org.apache.hadoop.fs.Path(checkpoint_dir, "sources")
+        if sources.getFileSystem(spark._jsc.hadoopConfiguration()).exists(sources):
+            raise ValueError(
+                "checkpoint_dir has prior stream progress; the fresh "
+                "CmsAccumulator would silently miss already-processed files "
+                "— use a new checkpoint, or persist/merge the prior sketch"
+            )
     acc = CmsAccumulator()
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:

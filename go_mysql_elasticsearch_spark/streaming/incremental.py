@@ -182,7 +182,7 @@ def compact(
         if cur_gen:
             shutil.rmtree(old_root, ignore_errors=True)
         else:
-            for sub in ("segments", "tombstones.parquet", "term_strings.parquet"):
+            for sub in ("segments", "tombstones.parquet"):
                 shutil.rmtree(os.path.join(index_dir, sub), ignore_errors=True)
     return manifests
 
@@ -211,7 +211,7 @@ def gc_old_generations(index_dir: str, retain_sec: float = 0.0) -> list[str]:
     if root != index_dir:
         old_segs = os.path.join(index_dir, "segments")
         if os.path.isdir(old_segs) and _time.time() - os.path.getmtime(old_segs) >= retain_sec:
-            for sub in ("segments", "tombstones.parquet", "term_strings.parquet"):
+            for sub in ("segments", "tombstones.parquet"):
                 p = os.path.join(index_dir, sub)
                 if os.path.exists(p):
                     shutil.rmtree(p, ignore_errors=True)

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from go_mysql_elasticsearch_spark.index.build import build_index
 from go_mysql_elasticsearch_spark.index.reader import IndexReader
-from go_mysql_elasticsearch_spark.query.phrase import match_phrase, phrase_match_expr
+from go_mysql_elasticsearch_spark.query.phrase import match_phrase
 from go_mysql_elasticsearch_spark.query.scoring import analyze_query, bm25_naive
 from go_mysql_elasticsearch_spark.query.wand import bm25_topk
 from go_mysql_elasticsearch_spark.analyzer import tokens_col
@@ -75,13 +75,18 @@ def test_min_should_match(spark, reader):
 
 def test_phrase_results_contain_phrase(spark, reader):
     res = match_phrase(spark, reader, "hash join", k=10)
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    with_phrase = docs.select(
-        "doc_id", tokens_col("text").alias("__pt")
-    ).where(phrase_match_expr("__pt", ["hash", "join"]))
-    ids = {r["doc_id"] for r in with_phrase.collect()}
     got = [r["doc_id"] for r in res.collect()]
-    assert got and all(d in ids for d in got)
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    toks = {
+        r["doc_id"]: r["t"]
+        for r in docs.where(F.col("doc_id").isin(got))
+        .select("doc_id", tokens_col("text").alias("t"))
+        .collect()
+    }
+    assert got and all(
+        any(t[i:i + 2] == ["hash", "join"] for i in range(len(t) - 1))
+        for t in (toks[d] for d in got)
+    )
 
 
 def test_phrase_zero_hit(spark, reader):

@@ -71,3 +71,17 @@ def test_accumulator_order_invariance(spark, events):
     a2.add(c1)
     a2.add(c0)
     assert a1.cells == a2.cells
+
+
+def test_reused_uri_checkpoint_is_refused(spark, events, tmp_path_factory):
+    """A durable checkpoint given as a ``file://`` URI is resolved
+    through Hadoop's FileSystem, so a second run over it raises instead
+    of returning a sketch that misses the already-processed files."""
+    base = tmp_path_factory.mktemp("cms_uri")
+    src = str(base / "ev")
+    events.repartition(2).write.parquet(src)
+    ckpt = (base / "ckpt").as_uri()
+    acc = cms_stream_sketch(spark, src, EV_SCHEMA, checkpoint_dir=ckpt)
+    assert acc.n_batches >= 1
+    with pytest.raises(ValueError, match="prior stream progress"):
+        cms_stream_sketch(spark, src, EV_SCHEMA, checkpoint_dir=ckpt)

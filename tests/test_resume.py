@@ -35,6 +35,7 @@ def test_kill_resume_identical(spark, tmp_index):
 def test_completed_segment_skipped(spark, tmp_index):
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     m1 = build_segment(spark, docs, tmp_index, segment_id=0, n_shards=2)
+    assert set(m1["phases"]) == {"docstore", "postings", "term_dict"}
     # second call must return the stored manifest without rebuilding
     mtime = os.path.getmtime(os.path.join(segment_dir(tmp_index, 0), "manifest.json"))
     m2 = build_segment(spark, docs, tmp_index, segment_id=0, n_shards=2)
