@@ -55,7 +55,8 @@ class IndexReader:
         self._tomb_count: int | None = None
         self._serving: DataFrame | None = None  # open_serving() residency
         self._driver_postings = None  # open_serving() driver-side copy (pandas)
-        self._relations: dict[str, DataFrame] = {}  # file name → union over segments
+        # file name → union over segments; "term_strings" → the merged dictionary
+        self._relations: dict[str, DataFrame] = {}
         # per-index analyzer/scoring settings (K5 parity); defaults if
         # the index predates settings persistence. The GENERATION
         # root's copy wins — it is written by the same build that
@@ -231,7 +232,10 @@ class IndexReader:
     # put the dist-query optimum at 16-32 partitions (~0.23 s vs
     # ~0.27 s at 8, ~0.43 s at 4): smaller cached partitions mean a
     # smaller batch-pruned scan and a smaller kernel slice per task,
-    # and the removed group-sort made task fan-out cheap.
+    # and the removed group-sort made task fan-out cheap. The phrase
+    # route policy (wand._execute, residency_first) reads the same
+    # budget: a query whose postings fit one partition stays on the
+    # driver.
     SERVING_PART_BYTES = 4 * 1024 * 1024
 
     def _serving_parts(self) -> int:
@@ -418,14 +422,15 @@ class IndexReader:
         scans stay range-sorted so a prefix filter pushes into each scan
         before the merge agg (plan-asserted). df sums per-segment
         build-time counts — Lucene semantics: tombstoned docs keep
-        counting until their segment merges away."""
-        per_seg = None
-        for _sid, p in self._seg_paths("term_dict.parquet"):
-            d = self.spark.read.parquet(p)
-            per_seg = d if per_seg is None else per_seg.unionByName(d)
-        return per_seg.groupBy("term").agg(
-            F.sum("df").cast("long").alias("df"), F.first("tid").alias("tid")
-        ).select("term", "tid", "df")
+        counting until their segment merges away. Built once per reader,
+        like ``_union``'s relations."""
+        out = self._relations.get("term_strings")
+        if out is None:
+            out = self._union("term_dict.parquet").groupBy("term").agg(
+                F.sum("df").cast("long").alias("df"), F.first("tid").alias("tid")
+            ).select("term", "tid", "df")
+            self._relations["term_strings"] = out
+        return out
 
     def df_lookup(self, tids: list[int]) -> dict[int, int]:
         """tid → document frequency, memoized driver-side.

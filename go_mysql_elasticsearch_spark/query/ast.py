@@ -214,7 +214,7 @@ def filter_docs(spark: SparkSession, reader: IndexReader, q) -> DataFrame:
 def all_hits(spark: SparkSession, reader: IndexReader, q) -> DataFrame:
     """Query context → DataFrame(doc_id, score), score rounded, ALL
     matching docs (no limit — result shaping happens in topk)."""
-    from .phrase import _positional_hits, phrase_words
+    from .phrase import _hits_df, _positional_hits, phrase_words
     from .wand import bm25_topk
 
     if isinstance(q, Match):
@@ -222,9 +222,8 @@ def all_hits(spark: SparkSession, reader: IndexReader, q) -> DataFrame:
                          min_should=q.min_should, return_all=True)
     if isinstance(q, Phrase):
         words = phrase_words(q.text, getattr(reader, "settings", {}).get("token_pattern"))
-        return _positional_hits(spark, reader, words, list(dict.fromkeys(words))).select(
-            "doc_id", F.round("raw", ROUND_DIGITS).alias("score")
-        )
+        hits = _positional_hits(spark, reader, words, list(dict.fromkeys(words)))
+        return _hits_df(spark, hits).select("doc_id", F.round("raw", ROUND_DIGITS).alias("score"))
     if isinstance(q, MatchAll):
         return reader.docstore().select("doc_id", F.lit(float(q.boost)).alias("score"))
     if isinstance(q, (Term, Terms, Range, Exists, Ne)):

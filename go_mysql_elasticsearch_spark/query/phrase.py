@@ -18,10 +18,15 @@ df/idf on the driver, binds the query into ONE positional kernel
 pos_vb. The executor's four routes are the match query's —
 resident-driver, pull-driver, residency ``mapInPandas`` and the
 ``groupBy(segment, shard).applyInPandas`` fallback — with one phrase
-policy: ``auto`` takes the residency whenever serving is open. Per
-(segment, shard) group the kernel decodes the sub-lists, AND-intersects
-doc sets, chain-verifies positions (pos(w0) ∩ pos(w1)-1 ∩ ...) and
-scores survivors; the caller then takes the global deterministic
+policy: with serving open, ``auto`` takes the residency only when the
+phrase's estimated postings bytes exceed one serving partition
+(``IndexReader.SERVING_PART_BYTES``); smaller phrases stay on the
+driver. Per (segment, shard) group the kernel decodes the sub-lists,
+AND-intersects doc sets, chain-verifies positions (pos(w0) ∩ pos(w1)-1
+∩ ...) and scores survivors. ``_top`` then ranks by the global
+deterministic order: driver-route hits on the driver (rounded by
+``scoring.round_score``, Spark's own rule, then sorted, cut to k and
+shipped in one ``createDataFrame``), distributed hits with a Spark
 ORDER BY + LIMIT k.
 """
 
@@ -321,16 +326,17 @@ def _positional_hits(
     score_words: list[str],
     prefix_tids: list[int] | None = None,
     slop: int = 0,
-    topk: int | None = None,
     strategy: str = "auto",
-) -> DataFrame:
-    """Shared engine: DataFrame(doc_id, raw) of docs matching the chain
-    (+optional prefix continuation), scored over score_words. Every
-    served segment carries ``pos_vb`` (the reader's format floor).
-    Empty-result short-circuits return an empty frame. ``strategy``
-    mirrors bm25_topk: 'auto', 'driver', 'distributed' — the forced
-    paths exist so both serving shapes are benchmarked per round
-    (qb_phrase / qb_phrase_dist)."""
+) -> pd.DataFrame | DataFrame:
+    """Shared engine: the (doc_id, raw) rows of docs matching the chain
+    (+optional prefix continuation), scored over score_words — a
+    driver-local pandas frame on the driver routes (and for the
+    empty-result short-circuits), a Spark frame on the distributed ones
+    (``wand._execute``'s contract). Every served segment carries
+    ``pos_vb`` (the reader's format floor). ``strategy`` mirrors
+    bm25_topk: 'auto', 'driver', 'distributed' — the forced paths exist
+    so both serving shapes are benchmarked per round (qb_phrase /
+    qb_phrase_dist)."""
     tids_map = wand.term_ids(spark, list(dict.fromkeys(chain_words + score_words)))
     # df lookup covers the PREFIX-expansion tids too: their postings are
     # pulled by the tid IN filter, so they must count toward the
@@ -340,7 +346,7 @@ def _positional_hits(
     chain_tids = [tids_map[w] for w in chain_words]
     score_tids = list(dict.fromkeys(tids_map[w] for w in score_words))
     if any(t not in dfs for t in chain_tids + score_tids):
-        return spark.createDataFrame([], wand._HITS_SCHEMA)
+        return wand._hits_frame([], [])
     idfs = {t: _idf(reader.n_docs, d) for t, d in dfs.items()}
     st = getattr(reader, "settings", {})
     kernel = _make_positional_scorer(
@@ -349,36 +355,32 @@ def _positional_hits(
     )
     all_tids = list(dict.fromkeys(chain_tids + score_tids + list(prefix_tids or [])))
     est_bytes = sum(dfs.get(t, 0) for t in all_tids) * reader.bytes_per_posting
-    # residency_first (r6): with a serving session open, the
-    # shard-parallel route wins for PHRASE — positional chain
-    # verification parallelizes across partitions with zero Exchange
-    # and no per-query Sort, while the driver routes decode positions
-    # single-threaded (640k-doc tier, same window: distributed 0.23 s vs
-    # driver 0.41 s). Match queries keep the byte-estimate rule: their
-    # kernel over the resident copy is still the fastest route at
-    # coordinator-friendly sizes.
-    hits = wand._execute(spark, reader, all_tids, _PHRASE_COLS, kernel, est_bytes, strategy,
+    # residency_first: with a serving session open, a phrase whose
+    # postings outgrow one serving partition takes the shard-parallel
+    # residency — positional chain verification parallelizes across
+    # partitions with zero Exchange and no per-query Sort, while the
+    # driver routes decode positions single-threaded (r6, 640k-doc tier,
+    # 32 CPUs: distributed 0.23 s vs driver 0.41 s). Smaller phrases stay
+    # on the driver: one partition's worth of postings cannot pay back
+    # a Spark job. Match queries keep the plain byte-estimate rule.
+    return wand._execute(spark, reader, all_tids, _PHRASE_COLS, kernel, est_bytes, strategy,
                          residency_first=True)
+
+
+def _hits_df(spark: SparkSession, hits: pd.DataFrame | DataFrame) -> DataFrame:
+    """``_positional_hits`` rows as a Spark frame, for callers that
+    compose them with other Spark frames."""
     if isinstance(hits, DataFrame):
         return hits
-    if topk is not None and len(hits) > topk:
-        # prune to the top-k raw band BEFORE shipping rows back into
-        # Spark (a head-term phrase can match 10^4-10^5 docs; only
-        # ~k survive the final sort). The cut keeps everything
-        # within rounding slack of the k-th raw score, so the exact
-        # (round HALF_UP, doc_id) ordering — which numpy cannot
-        # reproduce bit-for-bit (banker's rounding) — still happens
-        # in Spark over the surviving handful.
-        kth = np.partition(hits["raw"].to_numpy(), -topk)[-topk]
-        hits = hits[hits["raw"].to_numpy() >= kth - 10.0 ** (-ROUND_DIGITS)]
-    # one partition: the hits are driver-local, and a single-partition
-    # child lets the caller's global sort run without a range-partition
-    # exchange (a sampling job plus a shuffle whenever the optimizer
-    # drops the limit because the hits already fit in k)
-    return spark.createDataFrame(hits, schema=wand._HITS_SCHEMA).coalesce(1)
+    return spark.createDataFrame(hits, schema=wand._HITS_SCHEMA)
 
 
-def _top(hits: DataFrame, k: int) -> DataFrame:
+def _top(spark: SparkSession, hits: pd.DataFrame | DataFrame, k: int) -> DataFrame:
+    """The ranked top ``k``: driver-local hits rank on the driver
+    (``wand._ranked``, one ``createDataFrame``); distributed hits take
+    Spark's global sort."""
+    if isinstance(hits, pd.DataFrame):
+        return wand._ranked(spark, hits, k)
     out = hits.select("doc_id", F.round("raw", ROUND_DIGITS).alias("score"))
     return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -391,8 +393,8 @@ def match_phrase(
     words = phrase_words(phrase, pattern)
     if not words:
         return wand._empty_result(spark)
-    return _top(_positional_hits(spark, reader, words, list(dict.fromkeys(words)), slop=slop,
-                                 topk=k, strategy=strategy), k)
+    return _top(spark, _positional_hits(spark, reader, words, list(dict.fromkeys(words)),
+                                        slop=slop, strategy=strategy), k)
 
 
 def match_phrase_prefix(
@@ -431,15 +433,14 @@ def match_phrase_prefix(
         docs = reader.term_doc_ids(exp).select("doc_id").distinct()
         return docs.select("doc_id", F.lit(1.0).alias("score")).orderBy(F.asc("doc_id")).limit(k)
     full = words[:-1]
-    return _top(
-        _positional_hits(spark, reader, full, list(dict.fromkeys(full)), prefix_tids=exp, topk=k), k
-    )
+    return _top(spark, _positional_hits(spark, reader, full, list(dict.fromkeys(full)),
+                                        prefix_tids=exp), k)
 
 
 def phrase_doc_filter(spark: SparkSession, reader: IndexReader, words: list[str]) -> DataFrame:
     """doc_ids containing the exact phrase — the query_string phrase
     constraint, served from positional postings."""
-    return _positional_hits(spark, reader, words, []).select("doc_id")
+    return _hits_df(spark, _positional_hits(spark, reader, words, [])).select("doc_id")
 
 
 def phrase_prefix_oracle_sql(

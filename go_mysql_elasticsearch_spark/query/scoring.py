@@ -26,13 +26,17 @@ from __future__ import annotations
 
 import math
 import re
+from decimal import ROUND_HALF_UP, Context, Decimal
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..analyzer import BM25_B, BM25_K1, TOKEN_PATTERN, duckdb_tokens_sql, tokens_col
 
 ROUND_DIGITS = 6
+# enough digits to quantize any finite double to ROUND_DIGITS places
+_DEC = Context(prec=400)
 
 _PATTERN_CACHE: dict[str, "re.Pattern"] = {}
 
@@ -46,6 +50,36 @@ def analyze_query(query_text: str, pattern: str = TOKEN_PATTERN) -> list[str]:
     for t in rx.findall(query_text.lower()):
         seen.setdefault(t, None)
     return list(seen)
+
+
+def round_score(x):
+    """Spark's ``F.round(x, ROUND_DIGITS)`` on doubles, bit for bit —
+    the one rounding rule for every driver-local score.
+
+    Spark rounds ``BigDecimal(Double.toString(x)).setScale(ROUND_DIGITS,
+    HALF_UP)``: HALF_UP on the shortest decimal form, so
+    ``2.0000025 → 2.000003`` where ``np.round`` (half to even on the
+    binary value) gives 2.000002. ``np.round`` agrees everywhere the
+    scaled value's fraction is clear of one half by more than its
+    float error; only those near-ties (and values too large to carry a
+    fraction after scaling) go through ``Decimal(repr(x))`` HALF_UP.
+    Pinned against ``F.round`` by tests/test_rounding.py. Takes an
+    array (returns one) or a scalar (returns a float)."""
+    a = np.asarray(x, dtype=np.float64)
+    flat = np.atleast_1d(a)
+    with np.errstate(over="ignore", invalid="ignore"):
+        out = np.round(flat, ROUND_DIGITS)
+        scaled = np.abs(flat) * 10.0 ** ROUND_DIGITS
+        frac = scaled - np.floor(scaled)
+        slow = np.isfinite(flat) & (
+            (np.abs(frac - 0.5) <= 64 * np.spacing(scaled)) | (scaled >= 2.0 ** 52)
+        )
+    if slow.any():
+        q = Decimal(1).scaleb(-ROUND_DIGITS)
+        for i in np.flatnonzero(slow):
+            out[i] = float(Decimal(repr(float(flat[i]))).quantize(q, ROUND_HALF_UP, _DEC))
+    out = out + 0.0  # -0.0 → 0.0: a BigDecimal has no negative zero
+    return out if a.ndim else float(out[0])
 
 
 def idf(n_docs: int, df: int) -> float:

@@ -33,7 +33,9 @@ Execution plan (SURVEY.md §3.3 "Spark shape"):
    head term's postings never converge on one task.
 3. Driver routes return a driver-local pandas frame, distributed ones
    a Spark frame; both rank by ``round(score, 6) DESC, doc_id ASC``
-   (deterministic tie-break, SURVEY.md §4.4).
+   (deterministic tie-break, SURVEY.md §4.4). Driver-side rounding is
+   ``scoring.round_score``, which is Spark's ``F.round`` bit for bit,
+   so a result never depends on the route that produced it.
 
 One match kernel, ``_score_matched_driver``: per segment, one vectorized
 varbyte decode per term and a bincount group-sum. ``OR_KERNEL = "wand"``
@@ -62,7 +64,7 @@ from pyspark.sql import functions as F
 
 from ..index.codec import unpack_block, unpack_blocks_batch
 from ..index.reader import IndexReader
-from .scoring import ROUND_DIGITS, analyze_query, idf as _idf, tfpart
+from .scoring import ROUND_DIGITS, analyze_query, idf as _idf, round_score, tfpart
 
 # Heap scores are rounded to ROUND_DIGITS so the shard-local comparator
 # matches the global one exactly; the pruning slack must therefore cover
@@ -187,7 +189,7 @@ def _wand_or(lists: list[_TermIter], k: int, min_should: int,
             at = [L for L in live if L.cur_doc() == pivot_doc]
             block_acc = sum(L.block_ub() for L in at)
             if (block_acc + _EPS >= theta) and len(at) >= min_should and pivot_doc not in dead:
-                score = round(sum(L.cur_score() for L in at), ROUND_DIGITS)
+                score = round_score(sum(L.cur_score() for L in at))
                 if len(heap) < k:
                     heapq.heappush(heap, (score, -pivot_doc))
                 elif (score, -pivot_doc) > heap[0]:
@@ -343,7 +345,7 @@ def _score_matched_driver(
         if dead and docs.size:
             live = ~np.isin(docs, np.fromiter(dead, dtype=np.int64))
             docs, scores = docs[live], scores[live]
-        scores = np.round(scores, ROUND_DIGITS)
+        scores = round_score(scores)
         if not return_all and docs.size > k:
             # top-k partition → k-th score as threshold → deterministic
             # (score DESC, doc ASC) order among everything >= it
@@ -410,16 +412,19 @@ def _execute(spark: SparkSession, reader: IndexReader, tids: list[int], cols: li
     on the driver routes, a Spark frame of ``schema`` on the distributed
     ones. ``strategy``: 'auto' (byte-estimate cutover), 'driver' or
     'distributed'; ``residency_first`` makes 'auto' pick the residency
-    whenever serving is open (the phrase policy)."""
+    when serving is open and ``est_bytes`` exceeds one serving
+    partition's budget (``reader.SERVING_PART_BYTES``) — the phrase
+    policy. Below it the postings would fill at most one partition, so
+    partition parallelism cannot pay back a Spark job."""
     # Tombstone mode: small delete sets ride the kernel call as a dict;
     # past the threshold they are unioned into the shard groups as
     # sentinel rows — never collected to the driver.
     big_tombs = reader.tombstones_count() > reader.TOMBSTONE_DICT_MAX
     dead_upto = {} if big_tombs else reader.tombstones_map()
+    residency = residency_first and reader.serving_open and est_bytes > reader.SERVING_PART_BYTES
     use_driver = not big_tombs and (
         strategy == "driver"
-        or (strategy == "auto" and est_bytes <= DRIVER_PATH_MAX_BYTES
-            and not (residency_first and reader.serving_open))
+        or (strategy == "auto" and est_bytes <= DRIVER_PATH_MAX_BYTES and not residency)
     )
 
     def matched() -> DataFrame:
@@ -460,7 +465,7 @@ def _ranked(spark: SparkSession, hits: pd.DataFrame, k: int | None) -> DataFrame
     """Driver-local kernel rows → the result frame: rounded, ordered by
     (score DESC, doc_id ASC), the top ``k`` (all when k is None)."""
     out = pd.DataFrame({"doc_id": hits["doc_id"].astype("int64"),
-                        "score": hits["raw"].round(ROUND_DIGITS).astype("float64")})
+                        "score": round_score(hits["raw"].to_numpy())})
     out = out.sort_values(["score", "doc_id"], ascending=[False, True])
     return spark.createDataFrame(out if k is None else out.head(k), schema=_RESULT_SCHEMA)
 

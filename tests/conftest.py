@@ -1,4 +1,5 @@
 import shutil
+import uuid
 
 import pytest
 
@@ -19,3 +20,18 @@ def tmp_index(tmp_path):
     d = str(tmp_path / "idx")
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+def spark_jobs(spark, fn):
+    """(fn's result, number of Spark jobs fn launched), counted through
+    a job group and the status tracker."""
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker reads listener events
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -1,9 +1,7 @@
 """Fresh (non-serving) readers — the read-your-write path after a change
 batch: term hashing runs no Spark job, each segment relation is built
 once per reader, and a query launches only the jobs that do search work
-(the df lookup, the postings pull and the result)."""
-
-import uuid
+(the df lookup and the postings pull)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,20 +13,7 @@ from go_mysql_elasticsearch_spark.query.phrase import match_phrase
 from go_mysql_elasticsearch_spark.query.wand import bm25_topk, term_ids
 from go_mysql_elasticsearch_spark.streaming.incremental import apply_changes
 
-
-def _jobs(spark, fn):
-    """(fn's result, number of Spark jobs fn launched), counted through
-    a job group and the status tracker."""
-    sc = spark.sparkContext
-    group = f"jobcount-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker reads listener events
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+from .conftest import spark_jobs
 
 
 def _text(i: int) -> str:
@@ -65,7 +50,7 @@ def test_term_ids_equal_spark_xxhash64_without_a_job(spark):
     assert [len(t.encode("utf-8")) for t in terms[-4:]] == [31, 32, 33, 80]
     for t in terms:
         wand._TID_CACHE.pop(t, None)
-    got, n_jobs = _jobs(spark, lambda: term_ids(spark, terms))
+    got, n_jobs = spark_jobs(spark, lambda: term_ids(spark, terms))
     want = {
         r["t"]: r["h"]
         for r in spark.createDataFrame([(t,) for t in terms], "t string")
@@ -80,27 +65,37 @@ def test_fresh_reader_builds_postings_relation_once(spark, cdc_index):
     r = IndexReader(spark, cdc_index)
     assert len(r.manifests) == 3 and not r.serving_open
     first = r.postings()
-    again, n_jobs = _jobs(spark, r.postings)
+    again, n_jobs = spark_jobs(spark, r.postings)
     assert again is first
     assert n_jobs == 0
 
 
+def test_fresh_reader_builds_term_strings_once(spark, cdc_index):
+    r = IndexReader(spark, cdc_index)
+    first = r.term_strings()
+    again, n_jobs = spark_jobs(spark, r.term_strings)
+    assert again is first
+    assert n_jobs == 0
+    assert {x["term"] for x in first.where(F.col("term").startswith("fresh")).collect()} == {
+        "freshleft", "freshright", "freshmatch"}
+
+
 def test_fresh_reader_query_jobs(spark, cdc_index):
     """After one warm-up query (dictionary and tombstones cached), a
-    match with unseen terms runs the df lookup and the postings pull and
-    nothing else; a phrase adds one job for its top-k, whether or not
-    its hits exceed k."""
+    match or a phrase with unseen terms runs the df lookup and the
+    postings pull and nothing else: both rank their hits on the driver,
+    whether or not the hits exceed k."""
     r = IndexReader(spark, cdc_index)
     bm25_topk(spark, r, "common", k=5).collect()
     for t in ("freshmatch", "word2", "freshleft", "freshright", "word1"):
         wand._TID_CACHE.pop(t, None)
 
-    rows, n_match = _jobs(spark, lambda: bm25_topk(spark, r, "freshmatch word2", k=50).collect())
+    rows, n_match = spark_jobs(spark, lambda: bm25_topk(spark, r, "freshmatch word2", k=50).collect())
     assert n_match == 2
-    few, n_few = _jobs(spark, lambda: match_phrase(spark, r, "freshleft freshright", k=5).collect())
-    assert n_few <= 4
-    all_hits, n_all = _jobs(spark, lambda: match_phrase(spark, r, "common word1", k=50).collect())
-    assert n_all <= 4
+    few, n_few = spark_jobs(spark, lambda: match_phrase(spark, r, "freshleft freshright", k=5).collect())
+    assert n_few == 2
+    all_hits, n_all = spark_jobs(spark, lambda: match_phrase(spark, r, "common word1", k=50).collect())
+    assert n_all == 2
 
     live = dict(r.docstore().select("doc_id", "text").collect())
     assert 0 in live and 3 not in live and 4 not in live

@@ -24,7 +24,7 @@ from go_mysql_elasticsearch_spark.query import phrase as P
 from go_mysql_elasticsearch_spark.query import wand as W
 from go_mysql_elasticsearch_spark.streaming.incremental import apply_changes
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, spark_jobs
 
 MSEARCH = [(["data", "merge"], "or"), (["dup", "scan"], "and"), (["scan"], "or"),
            (["zzznope"], "or"), ("merge scan dup", "or")]
@@ -139,3 +139,40 @@ def test_routes_agree(results, index, case):
         rows, taken = results[route][case]
         assert taken == {route}, (case, route, taken)
         assert rows == want, (case, route, rows, want)
+
+
+@pytest.fixture(scope="module")
+def serving(spark, index):
+    r = IndexReader(spark, index[0])
+    r.open_serving()
+    yield r
+    r.close_serving()
+
+
+def test_auto_phrase_on_small_serving_index_is_resident_and_jobless(spark, serving, results,
+                                                                   monkeypatch):
+    """The index's phrase postings fit one serving partition, so ``auto``
+    keeps the phrase on the driver: it slices the resident copy and
+    ranks there, with no Spark job once the df memo is warm."""
+    query = lambda: _rows(P.match_phrase(spark, serving, "hash join", k=10))
+    query()  # warm the df memo
+    taken: set[str] = set()
+    _spy(monkeypatch, taken)
+    rows, n_jobs = spark_jobs(spark, query)
+    assert taken == {"resident"}
+    assert n_jobs == 0
+    assert rows == results["resident"]["phrase_slop0"][0]
+
+
+@pytest.mark.parametrize("strategy,route", [("driver", "resident"), ("distributed", "residency")])
+def test_single_word_match_and_phrase_rank_identically(spark, serving, monkeypatch, strategy,
+                                                       route):
+    """One word scores the same through the match and phrase kernels,
+    and both round by Spark's rule on every route."""
+    taken: set[str] = set()
+    _spy(monkeypatch, taken)
+    for w in ("data", "merge", "scan", "dup", "hash", "customer"):
+        match = _rows(W.bm25_topk(spark, serving, w, k=10, strategy=strategy))
+        phrase = _rows(P.match_phrase(spark, serving, w, k=10, strategy=strategy))
+        assert match and match == phrase, (w, match, phrase)
+    assert taken == {route}
