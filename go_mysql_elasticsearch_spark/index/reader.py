@@ -10,6 +10,12 @@ Format floor: a served segment must carry the manifest byte counters
 ``pos_vb`` position payloads) and a build-time ``term_dict.parquet``
 (v5). ``IndexReader`` refuses any older segment when it opens, so the
 query path assumes those artifacts everywhere and has no fallbacks.
+
+Segments are immutable, so what a reader derives from one segment is
+held once per process and shared by every reader that serves it
+(``_SEGMENTS``), as Lucene's ``DirectoryReader.openIfChanged`` shares
+per-segment readers across reopens: a reader opened after a change
+batch opens only the new segments.
 """
 
 from __future__ import annotations
@@ -18,12 +24,32 @@ import glob
 import json
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .build import POSTINGS_SCHEMA, gen_root
 
 # Per-session AQE refcount for serving mode (open_serving/close_serving):
 # {session: {"count": int, "before": str|None}}
 _AQE_STATE: dict = {}
+
+# Immutable per-segment state, shared by every reader in the process:
+# {(session, segment dir, manifest st_ino, manifest st_mtime_ns):
+#  {parquet name → relation, "df_arrays" → (sorted tids, dfs)}}. A
+# rewritten segment lands a new manifest by atomic replace, so its key
+# changes and stale state is never served. A reader's open drops the
+# entries under its index that it no longer serves (merged or compacted
+# away), which bounds the cache by the live segments.
+_SEGMENTS: dict[tuple, dict] = {}
+
+# Known parquet schemas: reading with one skips the schema-inference
+# job. docs.parquet infers, because its passthrough columns vary.
+_SCHEMAS = {
+    "postings.parquet": POSTINGS_SCHEMA,
+    "term_dict.parquet": "term string, df long, tid long",
+    "tombstones.parquet": "doc_id long, upto_seg int, is_delete boolean",
+}
 
 
 class IndexReader:
@@ -32,12 +58,12 @@ class IndexReader:
     A reader serves the segments of the manifests it found when it was
     opened, like an ES searcher: a segment that lands later (an
     ``apply_changes`` batch, a merge, a compact) is not served until a
-    new reader is opened. Each per-segment relation (postings, stored
-    docs) is built once per reader over exactly those segments."""
+    new reader is opened. Per-segment state (the parquet relations and
+    the df dictionary arrays) is built once per process per segment and
+    shared with later readers; the unions over exactly the served
+    segments are built once per reader."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
-        from .build import gen_root
-
         self.spark = spark
         self.index_dir = index_dir
         # closed indexes refuse readers (indices_close.go parity —
@@ -55,8 +81,9 @@ class IndexReader:
         self._tomb_count: int | None = None
         self._serving: DataFrame | None = None  # open_serving() residency
         self._driver_postings = None  # open_serving() driver-side copy (pandas)
-        # file name → union over segments; "term_strings" → the merged dictionary
-        self._relations: dict[str, DataFrame] = {}
+        # file name → union over segments; "term_strings" → the merged
+        # dictionary; "tombstones" → the doc-level tombstone relation
+        self._relations: dict[str, DataFrame | None] = {}
         # per-index analyzer/scoring settings (K5 parity); defaults if
         # the index predates settings persistence. The GENERATION
         # root's copy wins — it is written by the same build that
@@ -75,9 +102,12 @@ class IndexReader:
 
             self.settings = dict(DEFAULT_SETTINGS)
         self.manifests: list[dict] = []
+        keys: list[tuple] = []  # _SEGMENTS key per manifest
         for mp in sorted(glob.glob(os.path.join(self.root, "segments", "seg=*", "manifest.json"))):
             with open(mp) as f:
+                st = os.fstat(f.fileno())  # the identity of the file json reads
                 self.manifests.append(json.load(f))
+            keys.append((spark, os.path.abspath(os.path.dirname(mp)), st.st_ino, st.st_mtime_ns))
         # Tiered-merge supersession (Lucene merge semantics): a merged
         # segment's manifest lists the ids it replaced; those segments
         # are dead the INSTANT the merged manifest lands (its atomic
@@ -87,20 +117,26 @@ class IndexReader:
         for m in self.manifests:
             superseded.update(str(s) for s in m.get("merged_from", []))
         if superseded:
-            self.manifests = [
-                m for m in self.manifests if str(m["segment_id"]) not in superseded
-            ]
+            live = [str(m["segment_id"]) not in superseded for m in self.manifests]
+            self.manifests = [m for m, ok in zip(self.manifests, live) if ok]
+            keys = [k for k, ok in zip(keys, live) if ok]
+        self._seg_keys = keys
+        under = os.path.abspath(index_dir) + os.sep
+        served = set(keys)
+        for k in list(_SEGMENTS):
+            if k[0] is spark and k[1].startswith(under) and k not in served:
+                _SEGMENTS.pop(k, None)
         if not self.manifests:
             raise FileNotFoundError(f"no completed segments under {index_dir}")
         # the format floor (module docstring) — the one place that tests
         # for these artifacts
-        for m, (seg_id, td) in zip(self.manifests, self._seg_paths("term_dict.parquet")):
+        for m, key in zip(self.manifests, keys):
             missing = [k for k in ("n_postings", "postings_bytes") if k not in m]
-            if not os.path.exists(os.path.join(td, "_SUCCESS")):
+            if not os.path.exists(os.path.join(key[1], "term_dict.parquet", "_SUCCESS")):
                 missing.append("term_dict.parquet")
             if missing:
                 raise ValueError(
-                    f"segment {seg_id} of {index_dir} predates the v5 segment format "
+                    f"segment {m['segment_id']} of {index_dir} predates the v5 segment format "
                     f"(missing {', '.join(missing)}); rebuild the index from its source"
                 )
 
@@ -127,22 +163,23 @@ class IndexReader:
     def _postings_bytes(self) -> int:
         return sum(m["postings_bytes"] for m in self.manifests)
 
-    def _seg_paths(self, name: str) -> list[tuple[str, str]]:
-        return [
-            (m["segment_id"], os.path.join(self.root, "segments", f"seg={m['segment_id']}", name))
-            for m in self.manifests
-        ]
-
     def _union(self, name: str) -> DataFrame:
         """Union of every served segment's ``name`` parquet, built once
-        per reader: each ``spark.read.parquet`` runs a schema-inference
-        job, so rebuilding the union per query cost one job per segment
-        on every non-serving query."""
+        per reader over per-segment relations that are read once per
+        process (``_SEGMENTS``). A file with a known schema (``_SCHEMAS``)
+        is read with it and runs no job; ``docs.parquet`` infers its
+        schema, one job per segment the first time the process sees it."""
         out = self._relations.get(name)
         if out is None:
+            schema = _SCHEMAS.get(name)
             dfs = []
-            for seg_id, p in self._seg_paths(name):
-                dfs.append(self.spark.read.parquet(p).withColumn("segment", F.lit(str(seg_id))))
+            for m, key in zip(self.manifests, self._seg_keys):
+                st = _SEGMENTS.setdefault(key, {})
+                if name not in st:
+                    rd = self.spark.read if schema is None else self.spark.read.schema(schema)
+                    st[name] = rd.parquet(os.path.join(key[1], name)).withColumn(
+                        "segment", F.lit(str(m["segment_id"])))
+                dfs.append(st[name])
             out = dfs[0]
             for d in dfs[1:]:
                 # allowMissingColumns: segments built before/after a schema
@@ -267,7 +304,10 @@ class IndexReader:
         (nothing persists across processes — close_serving drops it),
         and the cap routes any index past DRIVER_RESIDENT_MAX_BYTES to
         the unchanged distributed path, so the 10^12-doc regime never
-        touches it. Results are bit-identical: the query path applies
+        touches it. The copy is stable-sorted by tid once, so the query
+        path slices a term's rows by binary search (``wand.
+        _driver_matched``) in O(matched); rows of one tid keep their
+        parquet order. Results are bit-identical: the query path applies
         the same tid filter / column selection to the same rows
         (asserted, tests/test_serving_driver_resident.py)."""
         if self._serving is None or self._driver_postings is False:
@@ -276,7 +316,9 @@ class IndexReader:
             if self._postings_bytes > self.DRIVER_RESIDENT_MAX_BYTES:
                 self._driver_postings = False
                 return None
-            self._driver_postings = self._union("postings.parquet").toPandas()
+            self._driver_postings = (
+                self._union("postings.parquet").toPandas().sort_values("tid", kind="stable")
+            )
         return self._driver_postings
 
     def close_serving(self) -> None:
@@ -393,13 +435,14 @@ class IndexReader:
         return rows.select("tid", "doc_id").distinct()
 
     def global_dict(self) -> DataFrame:
-        """(tid, df, max_tf) across segments — the idf source.
+        """(tid, df, max_tf) across segments, as a cached Spark frame.
 
         Derived once per reader from posting-block *metadata* (n_docs /
         max_tf columns only — column pruning keeps the packed bytes out
-        of the scan) and kept cached: block rows are corpus/block_size,
-        and the agg output is vocab-sized. The build pipeline stays two
-        jobs; serving pays this once per process.
+        of the scan): block rows are corpus/block_size, and the agg
+        output is vocab-sized. The query path reads df through
+        :meth:`df_lookup`, which uses this frame only for an index whose
+        segment dictionaries are too large to hold on the driver.
         """
         if self._dict_df is None:
             self._dict_df = (
@@ -432,19 +475,56 @@ class IndexReader:
             self._relations["term_strings"] = out
         return out
 
+    def _df_arrays(self) -> list[tuple[np.ndarray, np.ndarray]] | None:
+        """Per served segment, its ``term_dict.parquet`` as two int64
+        arrays (tids sorted, dfs summed over duplicate tids), loaded once
+        per process per segment with no Spark job; None when they would
+        take more than DRIVER_RESIDENT_MAX_BYTES (16 B per term per
+        segment, from the manifests' term counts)."""
+        if 16 * sum(m["term_count"] for m in self.manifests) > self.DRIVER_RESIDENT_MAX_BYTES:
+            return None
+        import pyarrow.parquet as pq
+
+        out = []
+        for key in self._seg_keys:
+            st = _SEGMENTS.setdefault(key, {})
+            if "df_arrays" not in st:
+                t = pq.read_table(os.path.join(key[1], "term_dict.parquet"), columns=["tid", "df"])
+                tids, inv = np.unique(t.column("tid").to_numpy().astype(np.int64), return_inverse=True)
+                dfs = np.zeros(len(tids), dtype=np.int64)
+                np.add.at(dfs, inv, t.column("df").to_numpy())
+                st["df_arrays"] = (tids, dfs)
+            out.append(st["df_arrays"])
+        return out
+
     def df_lookup(self, tids: list[int]) -> dict[int, int]:
         """tid → document frequency, memoized driver-side.
 
-        Serving-path optimization: repeated query terms skip the dict
-        job entirely (one Spark job per *new* term set, none for warm
-        terms). The memo holds only queried tids — bounded by the query
+        df is the sum of each served segment's build-time count from its
+        ``term_dict.parquet``, probed by binary search in the driver-held
+        arrays (:meth:`_df_arrays`): no Spark job. Lucene semantics:
+        tombstoned docs keep counting until their segment merges away.
+        An index whose dictionaries are too large for the driver reads
+        the same counts from :meth:`global_dict`, one Spark job per new
+        term set. The memo holds only queried tids — bounded by the query
         workload, not the vocabulary."""
         missing = [t for t in tids if t not in self._df_cache]
         if missing:
-            rows = self.global_dict().where(F.col("tid").isin(missing)).collect()
-            found = {r["tid"]: int(r["df"]) for r in rows}
-            for t in missing:
-                self._df_cache[t] = found.get(t, 0)
+            arrays = self._df_arrays()
+            if arrays is None:
+                rows = self.global_dict().where(F.col("tid").isin(missing)).collect()
+                found = {r["tid"]: int(r["df"]) for r in rows}
+                counts = [found.get(t, 0) for t in missing]
+            else:
+                q = np.asarray(missing, dtype=np.int64)
+                total = np.zeros(len(q), dtype=np.int64)
+                for seg_tids, seg_dfs in arrays:
+                    if not len(seg_tids):
+                        continue
+                    pos = np.minimum(np.searchsorted(seg_tids, q), len(seg_tids) - 1)
+                    total += np.where(seg_tids[pos] == q, seg_dfs[pos], 0)
+                counts = total.tolist()
+            self._df_cache.update(zip(missing, counts))
         return {t: self._df_cache[t] for t in tids if self._df_cache.get(t, 0) > 0}
 
     # Above this many tombstones the driver-side dict path is refused
@@ -453,11 +533,23 @@ class IndexReader:
     # them inside task closures).
     TOMBSTONE_DICT_MAX = 100_000
 
+    def _load_tombstones(self) -> None:
+        """Fill the tombstone count and, under TOMBSTONE_DICT_MAX, the
+        doc_id → upto_seg map from one bounded collect; only a set over
+        the threshold pays a separate ``count()``."""
+        if self._tomb_count is not None:
+            return
+        t = self.tombstones()
+        rows = t.limit(self.TOMBSTONE_DICT_MAX + 1).collect() if t is not None else []
+        if len(rows) <= self.TOMBSTONE_DICT_MAX:
+            self._tomb_cache = {r["doc_id"]: int(r["upto_seg"]) for r in rows}
+            self._tomb_count = len(rows)
+        else:
+            self._tomb_count = int(t.count())
+
     def tombstones_count(self) -> int:
         """Cached tombstone row count (post doc-level max-merge)."""
-        if self._tomb_count is None:
-            t = self.tombstones()
-            self._tomb_count = int(t.count()) if t is not None else 0
+        self._load_tombstones()
         return self._tomb_count
 
     def tombstones_map(self) -> dict[int, int]:
@@ -467,15 +559,11 @@ class IndexReader:
         Guarded: only legal under TOMBSTONE_DICT_MAX — large delete sets
         must flow through :meth:`dead_sentinel_rows` (distributed join)
         instead of a driver dict captured in scorer closures."""
+        self._load_tombstones()
         if self._tomb_cache is None:
-            if self.tombstones_count() > self.TOMBSTONE_DICT_MAX:
-                raise ValueError(
-                    f"{self.tombstones_count()} tombstones exceed the driver-dict "
-                    f"threshold ({self.TOMBSTONE_DICT_MAX}); use dead_sentinel_rows()"
-                )
-            t = self.tombstones()
-            self._tomb_cache = (
-                {r["doc_id"]: int(r["upto_seg"]) for r in t.collect()} if t is not None else {}
+            raise ValueError(
+                f"{self._tomb_count} tombstones exceed the driver-dict "
+                f"threshold ({self.TOMBSTONE_DICT_MAX}); use dead_sentinel_rows()"
             )
         return self._tomb_cache
 
@@ -507,10 +595,13 @@ class IndexReader:
     def tombstones(self) -> DataFrame | None:
         """(doc_id, upto_seg): the doc's postings in segments ≤ upto_seg
         are dead. Segment-scoped so an upsert's re-added doc (in a NEWER
-        segment) stays live."""
-        p = os.path.join(self.root, "tombstones.parquet")
-        if glob.glob(os.path.join(p, "*.parquet")):
-            return self.spark.read.parquet(p).groupBy("doc_id").agg(
-                F.max("upto_seg").alias("upto_seg")
-            )
-        return None
+        segment) stays live. Built once per reader, with the table's
+        known schema (no inference job)."""
+        if "tombstones" not in self._relations:
+            p = os.path.join(self.root, "tombstones.parquet")
+            t = None
+            if glob.glob(os.path.join(p, "*.parquet")):
+                t = self.spark.read.schema(_SCHEMAS["tombstones.parquet"]).parquet(p).groupBy(
+                    "doc_id").agg(F.max("upto_seg").alias("upto_seg"))
+            self._relations["tombstones"] = t
+        return self._relations["tombstones"]

@@ -4,8 +4,9 @@ query executor every postings query (match, msearch, phrase) runs on.
 Execution plan (SURVEY.md §3.3 "Spark shape"):
 
 1. The caller analyzes the query with the index analyzer, hashes its
-   terms and looks up each term's global df in the (tiny) term
-   dictionary → driver-side idf map. It binds the query into one
+   terms and looks up each term's global df in the driver-held segment
+   dictionaries (``reader.df_lookup``, no Spark job) → driver-side idf
+   map. It binds the query into one
    kernel, ``kernel(pdf, dead_upto) -> (doc_id, raw)``, and hands
    ``_execute`` the matched tids, the columns the kernel reads and
    the byte estimate Σ df × bytes/posting (exact manifest counters,
@@ -387,11 +388,19 @@ def _driver_matched(reader: IndexReader, tids: list[int], cols: list[str]):
     no serving copy is held (closed serving / over the byte cap). Same
     rows, same columns, same dtypes as the ``matched.toPandas()`` pull
     it replaces; only the transport differs (measured: ~60 ms fixed
-    per-query job overhead eliminated)."""
+    per-query job overhead eliminated). The copy is sorted by tid, so
+    each requested tid is one ``[searchsorted left, right)`` row range:
+    O(matched), not a scan of the copy."""
     dp = reader.driver_postings()
     if dp is None:
         return None
-    return dp.loc[dp["tid"].isin(tids), cols]
+    col = dp["tid"].to_numpy()
+    q = np.unique(np.asarray(tids, dtype=np.int64))
+    lo, hi = np.searchsorted(col, q, "left"), np.searchsorted(col, q, "right")
+    n = hi - lo
+    # row i of the slice is lo[range of i] + its offset within that range
+    rows = np.repeat(lo - np.cumsum(n) + n, n) + np.arange(n.sum())
+    return dp.iloc[rows][cols]
 
 
 # At or below this many estimated packed BYTES a query runs on a driver

@@ -1,17 +1,21 @@
 """Fresh (non-serving) readers — the read-your-write path after a change
-batch: term hashing runs no Spark job, each segment relation is built
-once per reader, and a query launches only the jobs that do search work
-(the df lookup and the postings pull)."""
+batch: term hashing runs no Spark job, per-segment state (relations and
+df dictionaries) is built once per process and shared by later readers,
+df comes from the driver-held segment dictionaries, and a query launches
+only the job that does search work (the postings pull)."""
 
+import shutil
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from go_mysql_elasticsearch_spark.index.build import build_index
+from go_mysql_elasticsearch_spark.index.build import build_index, build_segment
 from go_mysql_elasticsearch_spark.index.reader import IndexReader
 from go_mysql_elasticsearch_spark.query import wand
 from go_mysql_elasticsearch_spark.query.phrase import match_phrase
 from go_mysql_elasticsearch_spark.query.wand import bm25_topk, term_ids
-from go_mysql_elasticsearch_spark.streaming.incremental import apply_changes
+from go_mysql_elasticsearch_spark.streaming.incremental import apply_changes, compact
 
 from .conftest import spark_jobs
 
@@ -32,14 +36,24 @@ def cdc_index(spark, tmp_path_factory):
     idx = str(tmp_path_factory.mktemp("freshidx") / "i")
     docs = spark.createDataFrame([(i, _text(i)) for i in range(40)], "doc_id long, text string")
     build_index(spark, docs, idx, n_segments=1, n_shards=2)
-    schema = "action string, doc_id long, text string"
-    apply_changes(spark, idx, spark.createDataFrame(
-        [("insert", 100 + i, _text(i)) for i in range(12)]
-        + [("update", 0, "freshmatch rewritten"), ("delete", 3, None)], schema), n_shards=2)
-    apply_changes(spark, idx, spark.createDataFrame(
-        [("insert", 200 + i, _text(i + 1)) for i in range(12)]
-        + [("update", 6, "freshleft freshright again"), ("delete", 4, None)], schema), n_shards=2)
+    _changes(spark, idx, [("insert", 100 + i, _text(i)) for i in range(12)]
+             + [("update", 0, "freshmatch rewritten"), ("delete", 3, None)])
+    _changes(spark, idx, [("insert", 200 + i, _text(i + 1)) for i in range(12)]
+             + [("update", 6, "freshleft freshright again"), ("delete", 4, None)])
     return idx
+
+
+def _changes(spark, idx, events):
+    apply_changes(spark, idx, spark.createDataFrame(
+        events, "action string, doc_id long, text string"), n_shards=2)
+
+
+@pytest.fixture()
+def cdc_copy(cdc_index, tmp_path):
+    """A private copy of ``cdc_index`` for tests that write to it."""
+    d = str(tmp_path / "copy")
+    shutil.copytree(cdc_index, d)
+    return d
 
 
 def test_term_ids_equal_spark_xxhash64_without_a_job(spark):
@@ -81,21 +95,21 @@ def test_fresh_reader_builds_term_strings_once(spark, cdc_index):
 
 
 def test_fresh_reader_query_jobs(spark, cdc_index):
-    """After one warm-up query (dictionary and tombstones cached), a
-    match or a phrase with unseen terms runs the df lookup and the
-    postings pull and nothing else: both rank their hits on the driver,
-    whether or not the hits exceed k."""
+    """After one warm-up query (tombstones cached), a match or a phrase
+    with unseen terms runs the postings pull and nothing else: df comes
+    from the driver-held segment dictionaries, and both rank their hits
+    on the driver, whether or not the hits exceed k."""
     r = IndexReader(spark, cdc_index)
     bm25_topk(spark, r, "common", k=5).collect()
     for t in ("freshmatch", "word2", "freshleft", "freshright", "word1"):
         wand._TID_CACHE.pop(t, None)
 
     rows, n_match = spark_jobs(spark, lambda: bm25_topk(spark, r, "freshmatch word2", k=50).collect())
-    assert n_match == 2
+    assert n_match == 1
     few, n_few = spark_jobs(spark, lambda: match_phrase(spark, r, "freshleft freshright", k=5).collect())
-    assert n_few == 2
+    assert n_few == 1
     all_hits, n_all = spark_jobs(spark, lambda: match_phrase(spark, r, "common word1", k=50).collect())
-    assert n_all == 2
+    assert n_all == 1
 
     live = dict(r.docstore().select("doc_id", "text").collect())
     assert 0 in live and 3 not in live and 4 not in live
@@ -106,3 +120,92 @@ def test_fresh_reader_query_jobs(spark, cdc_index):
     assert len(phrase_docs) > 5
     assert len(few) == 5 and {row["doc_id"] for row in few} <= phrase_docs
     assert {row["doc_id"] for row in all_hits} == {d for d, t in live.items() if "common word1" in t}
+
+
+def _dict_df(reader: IndexReader) -> dict[int, int]:
+    return {r["tid"]: r["df"] for r in reader.global_dict().select("tid", "df").collect()}
+
+
+def test_second_reader_shares_segment_state(spark, cdc_copy):
+    """A reader over segments the process has already seen reads no
+    schema and no dictionary again; after one more change batch a new
+    reader opens only the new segment."""
+    bm25_topk(spark, IndexReader(spark, cdc_copy), "common", k=5).collect()
+    r = IndexReader(spark, cdc_copy)
+    _, n_postings = spark_jobs(spark, r.postings)
+    assert n_postings == 0
+    unseen = list(term_ids(spark, ["filler3", "tail1", "nosuchterm"]).values())
+    assert not any(t in r._df_cache for t in unseen)
+    dfs, n_df = spark_jobs(spark, lambda: r.df_lookup(unseen))
+    assert n_df == 0
+    assert set(dfs) == set(unseen[:2]) and all(d > 0 for d in dfs.values())
+    assert all(t in r._df_cache for t in unseen)
+
+    _changes(spark, cdc_copy, [("insert", 300 + i, _text(i + 2)) for i in range(5)]
+             + [("delete", 5, None)])
+    rows, n_reopen = spark_jobs(
+        spark, lambda: bm25_topk(spark, IndexReader(spark, cdc_copy), "freshmatch word2", k=50).collect())
+    assert n_reopen <= 5
+    live = dict(IndexReader(spark, cdc_copy).docstore().select("doc_id", "text").collect())
+    assert 5 not in live and 300 in live
+    assert {row["doc_id"] for row in rows} == {
+        d for d, t in live.items() if {"freshmatch", "word2"} & set(t.split())}
+
+
+def test_df_lookup_equals_global_dict(spark, cdc_copy):
+    """Every dictionary tid's df from the segment dictionaries equals the
+    postings-block aggregate, on the 3-segment index and after compact."""
+    for compacted in (False, True):
+        if compacted:
+            compact(spark, cdc_copy, n_shards=2)
+        r = IndexReader(spark, cdc_copy)
+        assert len(r.manifests) == (1 if compacted else 3)
+        want = _dict_df(r)
+        assert len(want) > 10
+        got, n_jobs = spark_jobs(spark, lambda: r.df_lookup(list(want)))
+        assert got == want
+        assert n_jobs == 0
+
+
+def test_rewritten_segment_serves_new_df(spark, tmp_path):
+    """A segment rewritten in place gets a new manifest, so a new reader
+    never serves the process-wide state cached for the old one."""
+    idx = str(tmp_path / "rw")
+    old = spark.createDataFrame([(i, f"alpha beta{i % 2}") for i in range(10)], "doc_id long, text string")
+    build_segment(spark, old, idx, segment_id=0, n_shards=2)
+    r0 = IndexReader(spark, idx)
+    r0.postings()
+    tids = term_ids(spark, ["alpha", "gamma"])
+    assert r0.df_lookup(list(tids.values())) == {tids["alpha"]: 10}
+
+    new = spark.createDataFrame([(i, f"gamma beta{i % 2}") for i in range(4)], "doc_id long, text string")
+    build_segment(spark, new, idx, segment_id=0, n_shards=2, overwrite=True)
+    r1 = IndexReader(spark, idx)
+    assert r1.df_lookup(list(tids.values())) == {tids["gamma"]: 4}
+    assert set(_dict_df(r1)) == set(term_ids(spark, ["gamma", "beta0", "beta1"]).values())
+    assert {row["doc_id"] for row in bm25_topk(spark, r1, "gamma", k=10).collect()} == set(range(4))
+    assert bm25_topk(spark, r1, "alpha", k=10).count() == 0
+
+
+def test_driver_slice_equals_isin_filter(spark, cdc_index):
+    """The tid-sorted resident copy sliced by binary search returns the
+    rows the isin filter returns, in the same order, and the same row
+    set as the pruned parquet pull."""
+    r = IndexReader(spark, cdc_index)
+    r.open_serving()
+    try:
+        dp = r.driver_postings()
+        present = np.unique(dp["tid"].to_numpy())
+        cols = wand._MATCH_COLS
+        rng = np.random.default_rng(7)
+        for _ in range(25):
+            tids = [int(t) for t in rng.choice(present, size=int(rng.integers(0, 6)), replace=False)]
+            tids += [int(t) for t in rng.integers(-2**63, 2**63 - 1, size=int(rng.integers(0, 3)))]
+            tids += [wand._SENTINEL_TID] * int(rng.integers(0, 2)) + tids[:1]  # and a duplicate
+            got = wand._driver_matched(r, tids, cols)
+            want = dp.loc[dp["tid"].isin(tids), cols]
+            assert got.equals(want) and list(got.index) == list(want.index)
+            pulled = r._union("postings.parquet").where(F.col("tid").isin(tids)).select(*cols).toPandas()
+            assert sorted(map(tuple, got.to_numpy().tolist())) == sorted(map(tuple, pulled.to_numpy().tolist()))
+    finally:
+        r.close_serving()
