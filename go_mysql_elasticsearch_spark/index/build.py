@@ -319,8 +319,10 @@ def build_segment(
     # contiguous (tid, shard, doc_id, pos) runs. The width is pinned (AQE would otherwise coalesce the
     # small bench shuffle to 1-2 tasks and serialize the Python stage;
     # at real scale you want it pinned to ~2-3x cluster cores anyway).
-    # Output files stay sorted by term → parquet min/max row-group
-    # stats make query-time term lookups prunable scans.
+    # Each output file is tid-sorted but, being a hash partition, spans
+    # the whole tid range: a file written as one row group (every file
+    # below the parquet block size) has min/max statistics that prune
+    # nothing, so a query-time tid filter reads every file's tid column.
     # Terms are keyed by xxhash64 (fixed-width int64) the moment they
     # leave the tokenizer: at web scale the term string would otherwise
     # ride through two shuffles and a sort (memory-bandwidth bound).

@@ -16,6 +16,11 @@ held once per process and shared by every reader that serves it
 (``_SEGMENTS``), as Lucene's ``DirectoryReader.openIfChanged`` shares
 per-segment readers across reopens: a reader opened after a change
 batch opens only the new segments.
+
+The driver reads segment files with pyarrow, with no Spark job: the df
+dictionaries, the postings a driver-route query needs
+(:meth:`IndexReader.arrow_postings`) and, under ``TOMBSTONE_DICT_MAX``,
+the tombstones. An index must therefore sit on a path pyarrow can open.
 """
 
 from __future__ import annotations
@@ -216,8 +221,11 @@ class IndexReader:
         Exchange (plan-asserted, tests/test_plans.py::
         test_serving_mode_no_per_query_exchange). The within-partition
         tid sort keeps the in-memory columnar batches tid-contiguous so
-        batch-level min/max pruning serves the term filter, replacing
-        the parquet row-group pruning the raw scan had.
+        batch-level min/max pruning serves the term filter. The raw
+        scan has no such pruning: the build hash-partitions postings
+        files by tid, so every file spans the whole tid range, and a
+        file written as one row group has min/max statistics that prune
+        nothing.
 
         The residency pins the open-time view (manifests + tombstone
         sentinels are resolved per query as before; new SEGMENTS landed
@@ -280,45 +288,62 @@ class IndexReader:
         return min(max(1, -(-self._postings_bytes // self.SERVING_PART_BYTES)), 4 * para)
 
     # Above this many packed-postings bytes the driver-side serving copy
-    # is refused and queries keep the pruned-scan pull path. An index
-    # past the cap is by definition in the distributed-serving regime.
-    # 1 GiB ≈ an ES search node's comfortable heap share for postings;
-    # the copy lives in the driver PYTHON process (outside the JVM
-    # heap), so the bound is host RAM, not spark.driver.memory.
+    # is refused and driver-route queries read the segment files per
+    # query (arrow_postings). An index past the cap is by definition in
+    # the distributed-serving regime. 1 GiB ≈ an ES search node's
+    # comfortable heap share for postings; the copy lives in the driver
+    # PYTHON process (outside the JVM heap), so the bound is host RAM,
+    # not spark.driver.memory.
     DRIVER_RESIDENT_MAX_BYTES = 1024 * 1024 * 1024
+
+    def arrow_postings(self, tids: list[int] | None = None, cols: list[str] | None = None):
+        """The served segments' postings rows of ``tids`` (all rows when
+        None), ``cols`` only (all postings columns then ``segment`` when
+        None), read with pyarrow on the driver: no Spark job.
+
+        Same rows, columns and dtypes as ``_union("postings.parquet")
+        .where(tid.isin(tids)).select(cols).toPandas()`` (asserted,
+        tests/test_fresh_reader.py); row order may differ. The filter
+        reads the tid column of every row group, since row-group
+        statistics of hash-partitioned files prune nothing."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        names = cols or [*POSTINGS_SCHEMA.fieldNames(), "segment"]
+        filters = None if tids is None else [("tid", "in", list(tids))]
+        parts = []
+        for m, key in zip(self.manifests, self._seg_keys):
+            t = pq.read_table(os.path.join(key[1], "postings.parquet"),
+                              columns=[c for c in names if c != "segment"], filters=filters)
+            seg = pa.nulls(t.num_rows, pa.string()).fill_null(str(m["segment_id"]))
+            parts.append(t.append_column("segment", seg))
+        return pa.concat_tables(parts).select(names).to_pandas()
 
     def driver_postings(self):
         """Driver-resident postings copy (pandas), or None.
 
         ES search-head parity: a data node serves queries from postings
         held in RAM (heap + page cache); the Spark translation of that
-        is the executor-side residency (open_serving). But the DRIVER
-        path — which already pulls each query's matched blocks to the
-        coordinator — still paid one Spark job per query for the pull
-        (~60 ms fixed job overhead at any index size, the measured p50
-        floor of the small-index bench tier). While a serving session
-        is open, a bytes-capped index keeps a full pandas copy of the
-        postings on the driver, so the driver path slices it locally:
-        zero Spark jobs per query. The copy is built ONCE per
-        open_serving from the same parquet the executor residency reads
-        (nothing persists across processes — close_serving drops it),
-        and the cap routes any index past DRIVER_RESIDENT_MAX_BYTES to
-        the unchanged distributed path, so the 10^12-doc regime never
-        touches it. The copy is stable-sorted by tid once, so the query
-        path slices a term's rows by binary search (``wand.
-        _driver_matched``) in O(matched); rows of one tid keep their
-        parquet order. Results are bit-identical: the query path applies
-        the same tid filter / column selection to the same rows
-        (asserted, tests/test_serving_driver_resident.py)."""
+        is the executor-side residency (open_serving). While a serving
+        session is open, an index within DRIVER_RESIDENT_MAX_BYTES also
+        keeps a full pandas copy of the postings on the driver, so the
+        driver route slices it locally instead of reading the segment
+        files per query. The copy is built ONCE per open_serving by
+        :meth:`arrow_postings` (all tids, all columns; no Spark job) from
+        the same parquet the executor residency reads (nothing persists
+        across processes — close_serving drops it); an index past the
+        cap never gets one. The copy is stable-sorted by tid once, so
+        the query path slices a term's rows by binary search (``wand.
+        _driver_matched``) in O(matched). Results are bit-identical to
+        every other route (asserted, tests/test_serving_driver_resident.py
+        and tests/test_routes.py)."""
         if self._serving is None or self._driver_postings is False:
             return None
         if self._driver_postings is None:
             if self._postings_bytes > self.DRIVER_RESIDENT_MAX_BYTES:
                 self._driver_postings = False
                 return None
-            self._driver_postings = (
-                self._union("postings.parquet").toPandas().sort_values("tid", kind="stable")
-            )
+            self._driver_postings = self.arrow_postings().sort_values("tid", kind="stable")
         return self._driver_postings
 
     def close_serving(self) -> None:
@@ -535,10 +560,26 @@ class IndexReader:
 
     def _load_tombstones(self) -> None:
         """Fill the tombstone count and, under TOMBSTONE_DICT_MAX, the
-        doc_id → upto_seg map from one bounded collect; only a set over
-        the threshold pays a separate ``count()``."""
+        doc_id → upto_seg map. A table of at most TOMBSTONE_DICT_MAX raw
+        rows (counted from parquet metadata) is read with pyarrow and
+        max-merged per doc in numpy: no Spark job. A larger one takes one
+        bounded collect of the merged Spark relation, and only a merged
+        set over the threshold pays a separate ``count()``."""
         if self._tomb_count is not None:
             return
+        p = os.path.join(self.root, "tombstones.parquet")
+        if glob.glob(os.path.join(p, "*.parquet")):
+            import pyarrow.dataset as ds
+
+            d = ds.dataset(p, format="parquet")
+            if d.count_rows() <= self.TOMBSTONE_DICT_MAX:
+                t = d.to_table(columns=["doc_id", "upto_seg"])
+                doc, upto = t.column("doc_id").to_numpy(), t.column("upto_seg").to_numpy()
+                order = np.lexsort((-upto.astype(np.int64), doc))  # per doc, max upto_seg first
+                docs, first = np.unique(doc[order], return_index=True)
+                self._tomb_cache = dict(zip(docs.tolist(), upto[order][first].tolist()))
+                self._tomb_count = len(self._tomb_cache)
+                return
         t = self.tombstones()
         rows = t.limit(self.TOMBSTONE_DICT_MAX + 1).collect() if t is not None else []
         if len(rows) <= self.TOMBSTONE_DICT_MAX:

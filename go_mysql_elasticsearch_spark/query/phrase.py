@@ -14,9 +14,11 @@ round 6, (score DESC, doc_id ASC).
 Execution shape: ``_positional_hits`` analyzes, hashes and looks up
 df/idf on the driver, binds the query into ONE positional kernel
 (``_make_positional_scorer``) and runs it on wand's query executor
-(``wand._execute``), over ``postings.where(tid.isin(q))`` INCLUDING
+(``wand._execute``), over the postings of the phrase's tids INCLUDING
 pos_vb. The executor's four routes are the match query's —
-resident-driver, pull-driver, residency ``mapInPandas`` and the
+resident-driver (a slice of the serving session's driver copy),
+pull-driver (a pyarrow read of the segment files; like the resident
+route it runs no Spark job), residency ``mapInPandas`` and the
 ``groupBy(segment, shard).applyInPandas`` fallback — with one phrase
 policy: with serving open, ``auto`` takes the residency only when the
 phrase's estimated postings bytes exceed one serving partition

@@ -18,9 +18,11 @@ Execution plan (SURVEY.md §3.3 "Spark shape"):
 
    - resident-driver: slice the serving session's driver-side copy
      (``_driver_matched``), zero Spark jobs;
-   - pull-driver: ``matched.toPandas()`` of the pruned scan — the term
-     filter is pushed into the parquet scan (files are sorted by term,
-     so row-group min/max stats prune);
+   - pull-driver: with no resident copy, read the matched postings
+     from the segment files with pyarrow (``reader.arrow_postings``),
+     zero Spark jobs. The tid filter scans every row group's tid column
+     (postings files are hash-partitioned by tid, so row-group min/max
+     statistics prune nothing);
    - residency ``mapInPandas``: with serving open, every cached
      partition holds complete (segment, shard) groups, so the kernel
      runs once per partition with no Exchange and no per-query Sort;
@@ -81,9 +83,13 @@ _SENTINEL_TID = -1
 
 
 def _empty_result(spark: SparkSession) -> DataFrame:
-    """Zero-hit result. Built only on the branch that returns it: each
-    ``createDataFrame`` costs driver time even when unused."""
-    return spark.createDataFrame([], _RESULT_SCHEMA)
+    """Zero-hit result, with the result schema (nullable columns). An
+    always-false filter folds it to an empty local relation, whose
+    ``collect()`` runs no Spark job; an empty ``createDataFrame`` runs
+    one. Built only on the branch that returns it."""
+    fields = (f.split() for f in _RESULT_SCHEMA.split(","))
+    cols = ", ".join(f"CAST(NULL AS {t}) AS {c}" for c, t in fields)
+    return spark.sql(f"SELECT {cols} WHERE false")
 
 
 # Block-decode telemetry: blocks SEEN by cursors vs blocks actually
@@ -385,12 +391,11 @@ _MATCH_COLS = [
 def _driver_matched(reader: IndexReader, tids: list[int], cols: list[str]):
     """Matched postings sliced from the serving session's driver-side
     residency (reader.driver_postings) — zero Spark jobs — or None when
-    no serving copy is held (closed serving / over the byte cap). Same
-    rows, same columns, same dtypes as the ``matched.toPandas()`` pull
-    it replaces; only the transport differs (measured: ~60 ms fixed
-    per-query job overhead eliminated). The copy is sorted by tid, so
-    each requested tid is one ``[searchsorted left, right)`` row range:
-    O(matched), not a scan of the copy."""
+    no serving copy is held (closed serving / over the byte cap), in
+    which case ``_execute`` reads them with ``reader.arrow_postings``.
+    Same rows, columns and dtypes as that read. The copy is sorted by
+    tid, so each requested tid is one ``[searchsorted left, right)`` row
+    range: O(matched), not a scan of the copy."""
     dp = reader.driver_postings()
     if dp is None:
         return None
@@ -405,7 +410,7 @@ def _driver_matched(reader: IndexReader, tids: list[int], cols: list[str]):
 
 # At or below this many estimated packed BYTES a query runs on a driver
 # route: the matched blocks come to the coordinator (resident slice or
-# pruned scan pull — no shuffle, no Python workers) and the kernel runs
+# Arrow read — no Spark job, no Python workers) and the kernel runs
 # there — the classic search-head serving path. Above it, the
 # shard-parallel distributed routes take over (the 10^12-doc regime,
 # where a head term's postings must never converge on one node). Every
@@ -424,7 +429,11 @@ def _execute(spark: SparkSession, reader: IndexReader, tids: list[int], cols: li
     when serving is open and ``est_bytes`` exceeds one serving
     partition's budget (``reader.SERVING_PART_BYTES``) — the phrase
     policy. Below it the postings would fill at most one partition, so
-    partition parallelism cannot pay back a Spark job."""
+    partition parallelism cannot pay back a Spark job.
+
+    The driver routes run no Spark job: their postings are the resident
+    copy's slice (``_driver_matched``) or, with none held, a pyarrow read
+    (``reader.arrow_postings``)."""
     # Tombstone mode: small delete sets ride the kernel call as a dict;
     # past the threshold they are unioned into the shard groups as
     # sentinel rows — never collected to the driver.
@@ -435,13 +444,12 @@ def _execute(spark: SparkSession, reader: IndexReader, tids: list[int], cols: li
         strategy == "driver"
         or (strategy == "auto" and est_bytes <= DRIVER_PATH_MAX_BYTES and not residency)
     )
-
-    def matched() -> DataFrame:
-        return reader.postings().where(F.col("tid").isin(tids)).select(*cols)
-
     if use_driver:
         pdf = _driver_matched(reader, tids, cols)
-        return kernel(matched().toPandas() if pdf is None else pdf, dead_upto)
+        if pdf is None:
+            pdf = reader.arrow_postings(tids, cols)
+        return kernel(pdf, dead_upto)
+    matched = reader.postings().where(F.col("tid").isin(tids)).select(*cols)
     if reader.serving_open and not big_tombs:
         # Every cached partition holds COMPLETE (segment, shard) groups
         # (the residency's hash repartition is the guarantee), so the
@@ -455,11 +463,10 @@ def _execute(spark: SparkSession, reader: IndexReader, tids: list[int], cols: li
                 yield kernel(parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True),
                              dead_upto)
 
-        return matched().mapInPandas(run_partition, schema=schema)
-    frame = matched()
+        return matched.mapInPandas(run_partition, schema=schema)
     if big_tombs:
-        frame = frame.unionByName(reader.dead_sentinel_rows(), allowMissingColumns=True)
-    return frame.groupBy("segment", "shard").applyInPandas(
+        matched = matched.unionByName(reader.dead_sentinel_rows(), allowMissingColumns=True)
+    return matched.groupBy("segment", "shard").applyInPandas(
         lambda pdf: kernel(pdf, dead_upto), schema=schema
     )
 
@@ -485,9 +492,9 @@ def bm25_topk_batch(
     queries: list[tuple[str | list[str], str]],
     k: int = 10,
 ) -> list[DataFrame]:
-    """msearch economics (msearch.go): N sub-queries, ONE pruned
-    postings pull. The union of every sub-query's terms prunes a single
-    scan, and one batch kernel scores every sub-query against its slice
+    """msearch economics (msearch.go): N sub-queries, ONE postings
+    read. The union of every sub-query's terms filters a single read,
+    and one batch kernel scores every sub-query against its slice
     of each unit, tagging hits with ``qid``; the route is chosen exactly
     as for one query, over the union's byte estimate. The kernel output
     (≤ units × queries × k rows) is then brought to the driver and each

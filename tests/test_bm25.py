@@ -261,8 +261,9 @@ def test_wand_block_max_pruning_skips_blocks(spark, tmp_path, monkeypatch):
 
 def test_msearch_batch_shares_one_postings_pull(spark, reader):
     """bm25_topk_batch: results identical to per-query bm25_topk, and
-    the whole batch touches postings() exactly ONCE (msearch.go
-    economics — N sub-queries, one pruned scan)."""
+    the whole batch reads postings exactly ONCE, through postings() or
+    the driver's arrow_postings() (msearch.go economics — N
+    sub-queries, one postings read)."""
     from go_mysql_elasticsearch_spark.query.wand import bm25_topk, bm25_topk_batch
 
     queries = [(["data", "merge"], "or"), (["dup", "scan"], "and"), (["zzznope"], "or")]
@@ -272,18 +273,20 @@ def test_msearch_batch_shares_one_postings_pull(spark, reader):
     ]
 
     calls = {"n": 0}
-    orig = reader.postings
 
-    def counting():
-        calls["n"] += 1
-        return orig()
+    def counting(orig):
+        def read(*a, **kw):
+            calls["n"] += 1
+            return orig(*a, **kw)
+        return read
 
-    reader.postings = counting
+    reader.postings = counting(reader.postings)
+    reader.arrow_postings = counting(reader.arrow_postings)
     try:
         got_frames = bm25_topk_batch(spark, reader, queries, k=5)
         got = [[(r["doc_id"], r["score"]) for r in f.collect()] for f in got_frames]
     finally:
-        reader.postings = orig
+        del reader.postings, reader.arrow_postings
     assert got == want
     assert calls["n"] == 1, calls
 

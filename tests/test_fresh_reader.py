@@ -1,9 +1,11 @@
 """Fresh (non-serving) readers — the read-your-write path after a change
-batch: term hashing runs no Spark job, per-segment state (relations and
-df dictionaries) is built once per process and shared by later readers,
-df comes from the driver-held segment dictionaries, and a query launches
-only the job that does search work (the postings pull)."""
+batch: term hashing runs no Spark job, per-segment state (relations, df
+dictionaries and postings datasets) is built once per process and shared
+by later readers, df comes from the driver-held segment dictionaries,
+tombstones and the matched postings are read with pyarrow, and a query
+launches no Spark job at all."""
 
+import os
 import shutil
 
 import numpy as np
@@ -13,7 +15,7 @@ from pyspark.sql import functions as F
 from go_mysql_elasticsearch_spark.index.build import build_index, build_segment
 from go_mysql_elasticsearch_spark.index.reader import IndexReader
 from go_mysql_elasticsearch_spark.query import wand
-from go_mysql_elasticsearch_spark.query.phrase import match_phrase
+from go_mysql_elasticsearch_spark.query.phrase import _PHRASE_COLS, match_phrase
 from go_mysql_elasticsearch_spark.query.wand import bm25_topk, term_ids
 from go_mysql_elasticsearch_spark.streaming.incremental import apply_changes, compact
 
@@ -95,21 +97,22 @@ def test_fresh_reader_builds_term_strings_once(spark, cdc_index):
 
 
 def test_fresh_reader_query_jobs(spark, cdc_index):
-    """After one warm-up query (tombstones cached), a match or a phrase
-    with unseen terms runs the postings pull and nothing else: df comes
-    from the driver-held segment dictionaries, and both rank their hits
-    on the driver, whether or not the hits exceed k."""
+    """After one warm-up query, a match or a phrase with unseen terms
+    runs no Spark job: df comes from the driver-held segment
+    dictionaries, the postings from a pyarrow read of the segment files,
+    and both rank their hits on the driver, whether or not the hits
+    exceed k."""
     r = IndexReader(spark, cdc_index)
     bm25_topk(spark, r, "common", k=5).collect()
     for t in ("freshmatch", "word2", "freshleft", "freshright", "word1"):
         wand._TID_CACHE.pop(t, None)
 
     rows, n_match = spark_jobs(spark, lambda: bm25_topk(spark, r, "freshmatch word2", k=50).collect())
-    assert n_match == 1
+    assert n_match == 0
     few, n_few = spark_jobs(spark, lambda: match_phrase(spark, r, "freshleft freshright", k=5).collect())
-    assert n_few == 1
+    assert n_few == 0
     all_hits, n_all = spark_jobs(spark, lambda: match_phrase(spark, r, "common word1", k=50).collect())
-    assert n_all == 1
+    assert n_all == 0
 
     live = dict(r.docstore().select("doc_id", "text").collect())
     assert 0 in live and 3 not in live and 4 not in live
@@ -129,7 +132,7 @@ def _dict_df(reader: IndexReader) -> dict[int, int]:
 def test_second_reader_shares_segment_state(spark, cdc_copy):
     """A reader over segments the process has already seen reads no
     schema and no dictionary again; after one more change batch a new
-    reader opens only the new segment."""
+    reader's open plus first match runs no Spark job."""
     bm25_topk(spark, IndexReader(spark, cdc_copy), "common", k=5).collect()
     r = IndexReader(spark, cdc_copy)
     _, n_postings = spark_jobs(spark, r.postings)
@@ -145,7 +148,7 @@ def test_second_reader_shares_segment_state(spark, cdc_copy):
              + [("delete", 5, None)])
     rows, n_reopen = spark_jobs(
         spark, lambda: bm25_topk(spark, IndexReader(spark, cdc_copy), "freshmatch word2", k=50).collect())
-    assert n_reopen <= 5
+    assert n_reopen == 0
     live = dict(IndexReader(spark, cdc_copy).docstore().select("doc_id", "text").collect())
     assert 5 not in live and 300 in live
     assert {row["doc_id"] for row in rows} == {
@@ -209,3 +212,66 @@ def test_driver_slice_equals_isin_filter(spark, cdc_index):
             assert sorted(map(tuple, got.to_numpy().tolist())) == sorted(map(tuple, pulled.to_numpy().tolist()))
     finally:
         r.close_serving()
+
+
+def _same_frame(got, want):
+    """Same columns, dtypes, value types per column and row multiset."""
+    assert list(got.columns) == list(want.columns)
+    assert got.dtypes.to_dict() == want.dtypes.to_dict()
+    for c in got.columns:
+        assert {type(v) for v in got[c]} == {type(v) for v in want[c]}, c
+    assert sorted(map(tuple, got.to_numpy().tolist())) == sorted(map(tuple, want.to_numpy().tolist()))
+
+
+def test_arrow_postings_equal_spark_pull(spark, cdc_index):
+    """The pyarrow read of the matched postings returns the Spark pull's
+    rows field by field and dtype by dtype, with no Spark job, for sets
+    with absent and duplicate tids."""
+    r = IndexReader(spark, cdc_index)
+    postings = r._union("postings.parquet")
+    present = np.unique(r.arrow_postings(cols=["tid"])["tid"].to_numpy())
+    rng = np.random.default_rng(11)
+    for _ in range(25):
+        tids = [int(t) for t in rng.choice(present, size=int(rng.integers(1, 6)), replace=False)]
+        tids += [int(t) for t in rng.integers(-2**63, 2**63 - 1, size=int(rng.integers(0, 3)))]
+        tids += tids[:1]  # a duplicate
+        for cols in (wand._MATCH_COLS, _PHRASE_COLS):
+            got, n_jobs = spark_jobs(spark, lambda: r.arrow_postings(tids, cols))
+            assert n_jobs == 0
+            _same_frame(got, postings.where(F.col("tid").isin(tids)).select(*cols).toPandas())
+
+
+def test_driver_postings_equal_spark_copy(spark, cdc_index):
+    """The serving copy is built with no Spark job and equals the copy
+    Spark's ``toPandas()`` of all postings gives, sorted by tid."""
+    r = IndexReader(spark, cdc_index)
+    r.open_serving()
+    try:
+        dp, n_jobs = spark_jobs(spark, r.driver_postings)
+        assert n_jobs == 0
+        want = r._union("postings.parquet").toPandas().sort_values("tid", kind="stable")
+        assert dp["tid"].tolist() == want["tid"].tolist()
+        _same_frame(dp, want)
+    finally:
+        r.close_serving()
+
+
+def test_tombstone_map_equals_spark_aggregate(spark, cdc_copy, monkeypatch):
+    """The pyarrow tombstone map equals Spark's ``groupBy(doc_id)
+    .max(upto_seg)`` and loads with no Spark job, before and after a
+    change batch that tombstones doc 0 a second time. Over the raw-row
+    threshold, the Spark path gives the same map."""
+    for more in (False, True):
+        if more:
+            _changes(spark, cdc_copy, [("update", 0, "freshmatch again"), ("delete", 7, None)])
+        r = IndexReader(spark, cdc_copy)
+        got, n_jobs = spark_jobs(spark, r.tombstones_map)
+        assert n_jobs == 0
+        want = {row["doc_id"]: row["upto_seg"] for row in r.tombstones().collect()}
+        assert got == want and r.tombstones_count() == len(want)
+    assert want[0] == 2 and set(want) == {0, 3, 4, 6, 7}
+    n_raw = spark.read.parquet(os.path.join(r.root, "tombstones.parquet")).count()
+    assert n_raw > len(want)
+    monkeypatch.setattr(IndexReader, "TOMBSTONE_DICT_MAX", len(want))
+    spark_map, n_jobs = spark_jobs(spark, IndexReader(spark, cdc_copy).tombstones_map)
+    assert n_jobs > 0 and spark_map == want

@@ -4,12 +4,14 @@ deletes:
 
 - resident-driver: serving open, the driver slices its resident copy;
 - residency: serving open, ``mapInPandas`` over the cached partitions;
-- pull-driver: serving closed, the matched postings come to the driver;
+- pull-driver: serving closed, the driver reads the matched postings
+  from the segment files with pyarrow;
 - groupby: ``groupBy(segment, shard).applyInPandas`` with the deletes
   riding as sentinel rows (``TOMBSTONE_DICT_MAX = 0``).
 
 Each run records which route it took, so a route change that silently
-falls back to another one fails here too."""
+falls back to another one fails here too, and how many Spark jobs it
+ran: the driver routes run none."""
 
 import functools
 
@@ -80,7 +82,8 @@ def index(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def results(spark, index):
-    """route → case → (rows, routes the case's queries took)."""
+    """route → case → (rows, routes the case's queries took, Spark jobs
+    the case ran)."""
     d, _ = index
     out = {}
     for route, (serving, strategy, max_bytes, dict_max) in ROUTES.items():
@@ -100,7 +103,8 @@ def results(spark, index):
                 out[route] = {}
                 for case, fn in CASES.items():
                     taken.clear()
-                    out[route][case] = (fn(spark, r, strategy), set(taken))
+                    rows, n_jobs = spark_jobs(spark, lambda: fn(spark, r, strategy))
+                    out[route][case] = (rows, set(taken), n_jobs)
             finally:
                 r.close_serving()
     return out
@@ -136,9 +140,19 @@ def test_routes_agree(results, index, case):
     flat = [doc for rows in (want if case == "msearch" else [want]) for doc, _ in rows]
     assert not victims & set(flat), case
     for route in ROUTES:
-        rows, taken = results[route][case]
+        rows, taken, _ = results[route][case]
         assert taken == {route}, (case, route, taken)
         assert rows == want, (case, route, rows, want)
+
+
+# phrase_prefix expands its prefix through Spark over the term
+# dictionary before it reads any postings
+@pytest.mark.parametrize("case", [c for c in CASES if c != "phrase_prefix"])
+@pytest.mark.parametrize("route", ["resident", "pull"])
+def test_driver_routes_run_no_spark_job(results, route, case):
+    """With serving closed the driver reads postings with pyarrow, and
+    with it open slices its resident copy: no Spark job either way."""
+    assert results[route][case][2] == 0, (route, case)
 
 
 @pytest.fixture(scope="module")
