@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..query.scoring import ROUND_DIGITS, bm25_ctes
-from ..query.wand import bm25_topk
+from ..query.wand import _empty_result, bm25_topk
 from ..registry import index_for
 
 K1B = ""  # parameters live in bm25_ctes
@@ -126,7 +126,7 @@ def q_match_fuzzy(spark, sf_dir):
         pred = c if pred is None else (pred | c)
     exp = sorted(row["term"] for row in r.term_strings().where(pred).select("term").collect())
     if not exp:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _empty_result(spark)
     return bm25_topk(spark, r, exp, mode="or", k=10)
 
 

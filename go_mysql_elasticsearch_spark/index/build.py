@@ -363,8 +363,8 @@ def build_segment(
     )
     packed.write.mode("overwrite").parquet(os.path.join(seg, "postings.parquet"))
     # manifest term_count is HLL-approximate (observe() cannot run exact
-    # distinct); the exact dictionary is derived by IndexReader on first
-    # use from block metadata (no third job in the build's hot path).
+    # distinct); the exact per-term df lands in term_dict.parquet (job 3
+    # below), which is where IndexReader.df_lookup reads it.
     term_count = int(pack_obs.get["term_count"])
     _mark("postings")
 

@@ -73,7 +73,7 @@ class IndexReader:
         self.index_dir = index_dir
         # closed indexes refuse readers (indices_close.go parity —
         # index/indices.py close_index/open_index)
-        from .indices import CLOSED_MARKER, IndexClosedError
+        from .indices import CLOSED_MARKER, IndexClosedError, get_settings
 
         if os.path.exists(os.path.join(index_dir, CLOSED_MARKER)):
             raise IndexClosedError(f"index is closed: {index_dir}")
@@ -89,23 +89,13 @@ class IndexReader:
         # file name → union over segments; "term_strings" → the merged
         # dictionary; "tombstones" → the doc-level tombstone relation
         self._relations: dict[str, DataFrame | None] = {}
-        # per-index analyzer/scoring settings (K5 parity); defaults if
-        # the index predates settings persistence. The GENERATION
-        # root's copy wins — it is written by the same build that
-        # produced this generation's postings, so reader-side analysis
-        # and the packed postings can never disagree (the top-level
-        # copy can go stale across a compact)
-        self.settings = None
-        for sp in (os.path.join(self.root, "settings.json"),
-                   os.path.join(index_dir, "settings.json")):
-            if os.path.exists(sp):
-                with open(sp) as f:
-                    self.settings = json.load(f)
-                break
-        if self.settings is None:
-            from .build import DEFAULT_SETTINGS
-
-            self.settings = dict(DEFAULT_SETTINGS)
+        # per-index analyzer/scoring settings (K5 parity), complete:
+        # the build writes them, merged over the defaults, before any
+        # manifest lands. The GENERATION root's copy wins — it is written
+        # by the same build that produced this generation's postings, so
+        # reader-side analysis and the packed postings can never disagree
+        # (the top-level copy can go stale across a compact)
+        self.settings = get_settings(index_dir)
         self.manifests: list[dict] = []
         keys: list[tuple] = []  # _SEGMENTS key per manifest
         for mp in sorted(glob.glob(os.path.join(self.root, "segments", "seg=*", "manifest.json"))):
@@ -204,7 +194,7 @@ class IndexReader:
         """True while ``open_serving``'s residency backs ``postings()``."""
         return self._serving is not None
 
-    def open_serving(self, n_parts: int | None = None, keep_aqe: bool = False) -> DataFrame:
+    def open_serving(self, n_parts: int | None = None) -> DataFrame:
         """ES-style shard residency for the query path (VERDICT r4 #3).
 
         The distributed scorer is ``groupBy(segment, shard).
@@ -241,21 +231,19 @@ class IndexReader:
         latency (interleaved A/B at the 640k-doc tier: medians 0.73 s
         AQE-on vs 0.48 s AQE-off on the same residency). A serving
         session is a dedicated context, exactly as ES separates search
-        from ingest; pass ``keep_aqe=True`` to opt out on a shared
-        session.
+        from ingest.
         """
         if self._serving is None:
-            if not keep_aqe:
-                # session-wide refcount: overlapping serving readers
-                # must not restore AQE mid-serve or double-save "false"
-                # (code-review r5) — only the first open saves, only
-                # the last close restores
-                st = _AQE_STATE.setdefault(self.spark, {"count": 0, "before": None})
-                if st["count"] == 0:
-                    st["before"] = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-                    self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-                st["count"] += 1
-                self._aqe_held = True
+            # session-wide refcount: overlapping serving readers must not
+            # restore AQE mid-serve or double-save "false" (code-review
+            # r5) — only the first open saves, only the last close
+            # restores
+            st = _AQE_STATE.setdefault(self.spark, {"count": 0, "before": None})
+            if st["count"] == 0:
+                st["before"] = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
+                self.spark.conf.set("spark.sql.adaptive.enabled", "false")
+            st["count"] += 1
+            self._aqe_held = True
             n = n_parts or self._serving_parts()
             self._serving = (
                 self._union("postings.parquet")
@@ -360,27 +348,30 @@ class IndexReader:
                     self.spark.conf.set("spark.sql.adaptive.enabled", st["before"] or "true")
                     st["count"], st["before"] = 0, None
 
-    def docstore(self) -> DataFrame:
-        """Live stored fields: tombstoned (doc_id, segment ≤ upto_seg)
-        versions are filtered out (upsert = tombstone old + new segment,
-        reference K2-K4 semantics)."""
-        d = self._union("docs.parquet")
+    def _live(self, rows: DataFrame) -> DataFrame:
+        """``rows`` (with ``doc_id`` and ``segment``) without the versions
+        a tombstone kills: a segment-scoped anti-join on (doc_id,
+        segment ≤ upto_seg), so an upsert's re-added doc in a newer
+        segment stays live."""
         tomb = self.tombstones()
         if tomb is None:
-            return d
+            return rows
         t = tomb.select(F.col("doc_id").alias("_tdoc"), F.col("upto_seg").alias("_tseg"))
         # broadcast only while the delete set is small; past the
         # threshold let Catalyst shuffle the anti-join (a 10^9-row
         # tombstone table must never be broadcast)
         if self.tombstones_count() <= self.TOMBSTONE_DICT_MAX:
             t = F.broadcast(t)
-        return (
-            d.join(
-                t,
-                (d["doc_id"] == t["_tdoc"]) & (d["segment"].cast("int") <= t["_tseg"]),
-                "left_anti",
-            )
+        return rows.join(
+            t, (rows["doc_id"] == t["_tdoc"]) & (rows["segment"].cast("int") <= t["_tseg"]),
+            "left_anti",
         )
+
+    def docstore(self) -> DataFrame:
+        """Live stored fields: tombstoned versions are filtered out
+        (upsert = tombstone old + new segment, reference K2-K4
+        semantics)."""
+        return self._live(self._union("docs.parquet"))
 
     def decode_postings(self) -> DataFrame:
         """Flat (segment, tid, shard, doc_id, tf, dl) rows from packed
@@ -422,8 +413,8 @@ class IndexReader:
         """(tid, doc_id) for live docs containing any of ``tids`` —
         boolean term membership for query_string must/must_not, served
         from the pruned postings scan (docs_vb only decoded; tf/dl/pos
-        payloads never leave parquet). Tombstones are removed by a
-        segment-scoped anti-join — no driver materialization."""
+        payloads never leave parquet). Tombstones are removed by
+        :meth:`_live`'s anti-join — no driver materialization."""
         import numpy as np
         import pandas as pd
 
@@ -449,15 +440,7 @@ class IndexReader:
             .select("segment", "tid", "docs_vb")
             .mapInPandas(unpack, schema="segment string, tid long, doc_id long")
         )
-        tomb = self.tombstones()
-        if tomb is not None:
-            t = tomb.select(F.col("doc_id").alias("_tdoc"), F.col("upto_seg").alias("_tseg"))
-            rows = rows.join(
-                t,
-                (rows["doc_id"] == t["_tdoc"]) & (rows["segment"].cast("int") <= t["_tseg"]),
-                "left_anti",
-            )
-        return rows.select("tid", "doc_id").distinct()
+        return self._live(rows).select("tid", "doc_id").distinct()
 
     def global_dict(self) -> DataFrame:
         """(tid, df, max_tf) across segments, as a cached Spark frame.

@@ -10,10 +10,12 @@ one fixture at a time — so a user can compose ``Bool`` inside
 ranking contract (clause scores rounded to 6, compound totals
 re-rounded, ties broken by doc_id).
 
-Leaf scoring: ``Match`` runs block-max WAND (query/wand.py), ``Phrase``
-runs the positional-postings verifier (query/phrase.py); structured
-leaves (term/terms/range/exists) are docstore predicates — filter
-context, score 1.0 in query context, exactly ES's filter semantics.
+Leaf scoring: ``Match`` runs the match kernel (query/wand.py; the
+vectorized exhaustive kernel by default, block-max WAND under
+``OR_KERNEL = "wand"``), ``Phrase`` runs the positional-postings
+verifier (query/phrase.py); structured leaves (term/terms/range/exists)
+are docstore predicates — filter context, score 1.0 in query context,
+exactly ES's filter semantics.
 
 Scale notes: compounds are joins keyed on doc_id between already-pruned
 scored frames — broadcast when one side is small (Catalyst/AQE decide),
@@ -214,16 +216,14 @@ def filter_docs(spark: SparkSession, reader: IndexReader, q) -> DataFrame:
 def all_hits(spark: SparkSession, reader: IndexReader, q) -> DataFrame:
     """Query context → DataFrame(doc_id, score), score rounded, ALL
     matching docs (no limit — result shaping happens in topk)."""
-    from .phrase import _hits_df, _positional_hits, phrase_words
+    from .phrase import match_phrase
     from .wand import bm25_topk
 
     if isinstance(q, Match):
         return bm25_topk(spark, reader, list(q.terms), mode=q.mode,
                          min_should=q.min_should, return_all=True)
     if isinstance(q, Phrase):
-        words = phrase_words(q.text, getattr(reader, "settings", {}).get("token_pattern"))
-        hits = _positional_hits(spark, reader, words, list(dict.fromkeys(words)))
-        return _hits_df(spark, hits).select("doc_id", F.round("raw", ROUND_DIGITS).alias("score"))
+        return match_phrase(spark, reader, q.text, k=None)
     if isinstance(q, MatchAll):
         return reader.docstore().select("doc_id", F.lit(float(q.boost)).alias("score"))
     if isinstance(q, (Term, Terms, Range, Exists, Ne)):

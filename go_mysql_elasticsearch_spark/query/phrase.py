@@ -25,11 +25,13 @@ phrase's estimated postings bytes exceed one serving partition
 (``IndexReader.SERVING_PART_BYTES``); smaller phrases stay on the
 driver. Per (segment, shard) group the kernel decodes the sub-lists,
 AND-intersects doc sets, chain-verifies positions (pos(w0) ∩ pos(w1)-1
-∩ ...) and scores survivors. ``_top`` then ranks by the global
-deterministic order: driver-route hits on the driver (rounded by
-``scoring.round_score``, Spark's own rule, then sorted, cut to k and
-shipped in one ``createDataFrame``), distributed hits with a Spark
-ORDER BY + LIMIT k.
+∩ ...) and scores survivors. ``wand._top``, the match query's result
+tail, ranks the hits by the global deterministic order: driver-route
+hits on the driver (rounded by ``scoring.round_score``, Spark's own
+rule, then sorted, cut to k and shipped in one ``createDataFrame``),
+distributed hits with a Spark ORDER BY + LIMIT k. Compound callers
+(``phrase_doc_filter``, the query AST's ``Phrase`` leaf) take every
+hit, unordered on the distributed routes, with ``k=None``.
 """
 
 from __future__ import annotations
@@ -45,9 +47,8 @@ from . import wand
 from ..analyzer import TOKEN_PATTERN
 from ..index.codec import unpack_blocks_batch, unpack_positions_batch
 from ..index.reader import IndexReader
-from .scoring import ROUND_DIGITS, idf as _idf, tfpart
+from .scoring import idf as _idf, tfpart
 
-_TOK = re.compile(TOKEN_PATTERN)
 # the columns the positional kernel reads
 _PHRASE_COLS = ["segment", "shard", "tid", "first_doc_id", "docs_vb", "tfs_vb", "dls_vb", "pos_vb"]
 
@@ -65,10 +66,9 @@ def _in_sorted(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return b[idx] == a
 
 
-def phrase_words(phrase: str, pattern: str | None = None) -> list[str]:
+def phrase_words(phrase: str, pattern: str = TOKEN_PATTERN) -> list[str]:
     """Ordered tokens with duplicates (phrase order matters)."""
-    rx = re.compile(pattern) if pattern else _TOK
-    return rx.findall(phrase.lower())
+    return re.findall(pattern, phrase.lower())
 
 
 # Positions-decode telemetry (mirrors wand.DECODE_STATS): blocks whose
@@ -174,10 +174,6 @@ def _make_positional_scorer(
     was measured SLOWER in an interleaved A/B (557 ms vs 488 ms for
     qb_phrase) — the chain-verify intersect costs grow superlinearly
     with group size and dominate the saved per-group dispatch."""
-    from ..analyzer import BM25_B, BM25_K1
-
-    k1 = BM25_K1 if k1 is None else k1
-    b = BM25_B if b is None else b
     need = list(dict.fromkeys(chain_tids + score_tids))
 
     def score_group(pdf: pd.DataFrame, dead: frozenset):
@@ -350,13 +346,10 @@ def _positional_hits(
     if any(t not in dfs for t in chain_tids + score_tids):
         return wand._hits_frame([], [])
     idfs = {t: _idf(reader.n_docs, d) for t, d in dfs.items()}
-    st = getattr(reader, "settings", {})
     kernel = _make_positional_scorer(
-        chain_tids, score_tids, idfs, reader.avgdl, st.get("bm25_k1"), st.get("bm25_b"),
-        frozenset(prefix_tids) if prefix_tids else None, slop,
+        chain_tids, score_tids, idfs, reader.avgdl, reader.settings["bm25_k1"],
+        reader.settings["bm25_b"], frozenset(prefix_tids) if prefix_tids else None, slop,
     )
-    all_tids = list(dict.fromkeys(chain_tids + score_tids + list(prefix_tids or [])))
-    est_bytes = sum(dfs.get(t, 0) for t in all_tids) * reader.bytes_per_posting
     # residency_first: with a serving session open, a phrase whose
     # postings outgrow one serving partition takes the shard-parallel
     # residency — positional chain verification parallelizes across
@@ -365,38 +358,21 @@ def _positional_hits(
     # 32 CPUs: distributed 0.23 s vs driver 0.41 s). Smaller phrases stay
     # on the driver: one partition's worth of postings cannot pay back
     # a Spark job. Match queries keep the plain byte-estimate rule.
-    return wand._execute(spark, reader, all_tids, _PHRASE_COLS, kernel, est_bytes, strategy,
+    return wand._execute(spark, reader, dfs, _PHRASE_COLS, kernel, strategy,
                          residency_first=True)
 
 
-def _hits_df(spark: SparkSession, hits: pd.DataFrame | DataFrame) -> DataFrame:
-    """``_positional_hits`` rows as a Spark frame, for callers that
-    compose them with other Spark frames."""
-    if isinstance(hits, DataFrame):
-        return hits
-    return spark.createDataFrame(hits, schema=wand._HITS_SCHEMA)
-
-
-def _top(spark: SparkSession, hits: pd.DataFrame | DataFrame, k: int) -> DataFrame:
-    """The ranked top ``k``: driver-local hits rank on the driver
-    (``wand._ranked``, one ``createDataFrame``); distributed hits take
-    Spark's global sort."""
-    if isinstance(hits, pd.DataFrame):
-        return wand._ranked(spark, hits, k)
-    out = hits.select("doc_id", F.round("raw", ROUND_DIGITS).alias("score"))
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
 def match_phrase(
-    spark: SparkSession, reader: IndexReader, phrase: str, k: int = 10, slop: int = 0,
+    spark: SparkSession, reader: IndexReader, phrase: str, k: int | None = 10, slop: int = 0,
     strategy: str = "auto",
 ) -> DataFrame:
-    pattern = getattr(reader, "settings", {}).get("token_pattern", TOKEN_PATTERN)
-    words = phrase_words(phrase, pattern)
+    """Docs holding ``phrase`` within ``slop`` → the ranked top ``k``
+    (every hit, unordered on the distributed routes, when k is None)."""
+    words = phrase_words(phrase, reader.settings["token_pattern"])
     if not words:
         return wand._empty_result(spark)
-    return _top(spark, _positional_hits(spark, reader, words, list(dict.fromkeys(words)),
-                                        slop=slop, strategy=strategy), k)
+    return wand._top(spark, _positional_hits(spark, reader, words, list(dict.fromkeys(words)),
+                                             slop=slop, strategy=strategy), k)
 
 
 def match_phrase_prefix(
@@ -413,8 +389,7 @@ def match_phrase_prefix(
     Scoring: BM25 sum over the full (non-prefix) words — the expansion
     position gates matching but contributes no score term, keeping
     ranks independent of which expansion matched."""
-    pattern = getattr(reader, "settings", {}).get("token_pattern", TOKEN_PATTERN)
-    words = phrase_words(phrase, pattern)
+    words = phrase_words(phrase, reader.settings["token_pattern"])
     if not words:
         return wand._empty_result(spark)
     exp = [
@@ -435,14 +410,14 @@ def match_phrase_prefix(
         docs = reader.term_doc_ids(exp).select("doc_id").distinct()
         return docs.select("doc_id", F.lit(1.0).alias("score")).orderBy(F.asc("doc_id")).limit(k)
     full = words[:-1]
-    return _top(spark, _positional_hits(spark, reader, full, list(dict.fromkeys(full)),
-                                        prefix_tids=exp), k)
+    return wand._top(spark, _positional_hits(spark, reader, full, list(dict.fromkeys(full)),
+                                             prefix_tids=exp), k)
 
 
 def phrase_doc_filter(spark: SparkSession, reader: IndexReader, words: list[str]) -> DataFrame:
     """doc_ids containing the exact phrase — the query_string phrase
     constraint, served from positional postings."""
-    return _hits_df(spark, _positional_hits(spark, reader, words, [])).select("doc_id")
+    return wand._top(spark, _positional_hits(spark, reader, words, []), None).select("doc_id")
 
 
 def phrase_prefix_oracle_sql(

@@ -79,12 +79,12 @@ def query_string_topk(spark, reader, q: str, k: int = 10):
 
     from .phrase import phrase_doc_filter
     from .scoring import ROUND_DIGITS
-    from .wand import bm25_topk, term_ids
+    from .wand import _empty_result, bm25_topk, term_ids
 
     pq = parse_query_string(q)
     pos = pq.positive_terms
     if not pos:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _empty_result(spark)
     out = bm25_topk(spark, reader, pos, k=k, mode="or", return_all=True)
     gate_terms = list(dict.fromkeys(pq.must + pq.must_not))
     if gate_terms:

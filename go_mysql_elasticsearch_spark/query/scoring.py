@@ -156,8 +156,8 @@ def bm25_ctes(
     table: str = "documents",
     text_expr: str = "text",
     id_col: str = "doc_id",
-    k1: float | None = None,
-    b: float | None = None,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
 ) -> str:
     """Composable WITH-body: toks/dl/stats/tf/dfreq/persc CTEs.
 
@@ -172,8 +172,6 @@ def bm25_ctes(
     else:
         in_list = ", ".join("'" + t.replace("'", "''") + "'" for t in all_terms)
         term_filter = f"WHERE term IN ({in_list})"
-    k1 = BM25_K1 if k1 is None else k1
-    b = BM25_B if b is None else b
     return f"""toks AS (
   SELECT {id_col} AS doc_id, {duckdb_tokens_sql(text_expr)} AS t FROM {table}
 ),
@@ -201,8 +199,8 @@ def bm25_oracle_sql(
     text_expr: str = "text",
     id_col: str = "doc_id",
     phrase: list[str] | None = None,
-    k1: float | None = None,
-    b: float | None = None,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
 ) -> str:
     in_list = ", ".join("'" + t.replace("'", "''") + "'" for t in terms)
     filters = []
@@ -219,8 +217,6 @@ def bm25_oracle_sql(
         )
         filters.append("doc_id IN (SELECT doc_id FROM phrase_docs)")
     and_filter = ("WHERE " + " AND ".join(filters)) if filters else ""
-    k1 = BM25_K1 if k1 is None else k1
-    b = BM25_B if b is None else b
     return f"""
 WITH toks AS (
   SELECT {id_col} AS doc_id, {duckdb_tokens_sql(text_expr)} AS t FROM {table}

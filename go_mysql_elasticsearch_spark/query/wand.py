@@ -8,13 +8,14 @@ Execution plan (SURVEY.md §3.3 "Spark shape"):
    dictionaries (``reader.df_lookup``, no Spark job) → driver-side idf
    map. It binds the query into one
    kernel, ``kernel(pdf, dead_upto) -> (doc_id, raw)``, and hands
-   ``_execute`` the matched tids, the columns the kernel reads and
-   the byte estimate Σ df × bytes/posting (exact manifest counters,
-   so long-document corpora trip to the distributed routes earlier).
-2. ``_execute`` picks the tombstone mode — small delete sets reach the
-   kernel as the ``dead_upto`` dict; large ones ride the postings as
-   ``tid = -1`` sentinel rows and never touch the driver — and runs
-   the kernel on one of four routes, each written once:
+   ``_execute`` that df map and the columns the kernel reads.
+2. ``_execute`` estimates the query's bytes as Σ df × bytes/posting
+   (exact manifest counters, so long-document corpora trip to the
+   distributed routes earlier), picks the tombstone mode — small
+   delete sets reach the kernel as the ``dead_upto`` dict; large ones
+   ride the postings as ``tid = -1`` sentinel rows and never touch the
+   driver — and runs the kernel on one of four routes, each written
+   once:
 
    - resident-driver: slice the serving session's driver-side copy
      (``_driver_matched``), zero Spark jobs;
@@ -35,10 +36,13 @@ Execution plan (SURVEY.md §3.3 "Spark shape"):
    so a per-unit top-k is enough for the global top-k: at 10^12 docs a
    head term's postings never converge on one task.
 3. Driver routes return a driver-local pandas frame, distributed ones
-   a Spark frame; both rank by ``round(score, 6) DESC, doc_id ASC``
-   (deterministic tie-break, SURVEY.md §4.4). Driver-side rounding is
-   ``scoring.round_score``, which is Spark's ``F.round`` bit for bit,
-   so a result never depends on the route that produced it.
+   a Spark frame. ``_top`` turns either into the result frame, ranked
+   by ``round(score, 6) DESC, doc_id ASC`` (deterministic tie-break,
+   SURVEY.md §4.4): driver rows on the driver, rounded by
+   ``scoring.round_score`` (Spark's ``F.round`` bit for bit) and
+   shipped in one ``createDataFrame``, Spark rows with ``F.round`` and
+   a Spark ORDER BY + LIMIT. A result never depends on the route that
+   produced it.
 
 One match kernel, ``_score_matched_driver``: per segment, one vectorized
 varbyte decode per term and a bincount group-sum. ``OR_KERNEL = "wand"``
@@ -275,8 +279,8 @@ def _score_matched_driver(
     dead_upto: dict[int, int],
     n_terms: int,
     return_all: bool,
-    k1: float | None,
-    b: float | None,
+    k1: float,
+    b: float,
     or_kernel: str = "vectorized",
 ) -> pd.DataFrame:
     """The match kernel, on every route (bound by ``_match_kernel``).
@@ -293,10 +297,6 @@ def _score_matched_driver(
     with the final global sort (asserted by tests/test_routes.py and the
     oracle gate). ``or_kernel = "wand"`` runs OR top-k as block-max
     WAND instead, which is per-cursor and so per (segment, shard)."""
-    from ..analyzer import BM25_B, BM25_K1
-
-    k1 = BM25_K1 if k1 is None else k1
-    b = BM25_B if b is None else b
     out_docs, out_scores = [], []
     if or_kernel == "wand" and mode != "and" and not return_all:
         for g, dead in _live_groups(pdf, dead_upto, ["segment", "shard"]):
@@ -369,8 +369,7 @@ def _score_matched_driver(
 def _match_kernel(reader: IndexReader, idfs: dict[int, float], k: int, mode: str,
                   min_should: int, n_terms: int, return_all: bool):
     """Bind one match query into ``kernel(pdf, dead_upto)``."""
-    st = getattr(reader, "settings", {})
-    avgdl, k1, b = reader.avgdl, st.get("bm25_k1"), st.get("bm25_b")
+    avgdl, k1, b = reader.avgdl, reader.settings["bm25_k1"], reader.settings["bm25_b"]
     or_kernel = OR_KERNEL
 
     def kernel(pdf: pd.DataFrame, dead_upto: dict[int, int]) -> pd.DataFrame:
@@ -418,15 +417,16 @@ def _driver_matched(reader: IndexReader, tids: list[int], cols: list[str]):
 DRIVER_PATH_MAX_BYTES = 16 * 1024 * 1024
 
 
-def _execute(spark: SparkSession, reader: IndexReader, tids: list[int], cols: list[str],
-             kernel, est_bytes: float, strategy: str = "auto",
+def _execute(spark: SparkSession, reader: IndexReader, dfs: dict[int, int], cols: list[str],
+             kernel, strategy: str = "auto",
              residency_first: bool = False, schema: str = _HITS_SCHEMA):
-    """Run ``kernel(pdf, dead_upto)`` over the postings of ``tids`` (the
-    ``cols`` it reads) and return its rows: a driver-local pandas frame
-    on the driver routes, a Spark frame of ``schema`` on the distributed
-    ones. ``strategy``: 'auto' (byte-estimate cutover), 'driver' or
-    'distributed'; ``residency_first`` makes 'auto' pick the residency
-    when serving is open and ``est_bytes`` exceeds one serving
+    """Run ``kernel(pdf, dead_upto)`` over the postings of the tids in
+    ``dfs`` (tid → df; the ``cols`` the kernel reads) and return its
+    rows: a driver-local pandas frame on the driver routes, a Spark
+    frame of ``schema`` on the distributed ones. ``strategy``: 'auto'
+    (cutover on the estimate Σ df × ``reader.bytes_per_posting``),
+    'driver' or 'distributed'; ``residency_first`` makes 'auto' pick the
+    residency when serving is open and the estimate exceeds one serving
     partition's budget (``reader.SERVING_PART_BYTES``) — the phrase
     policy. Below it the postings would fill at most one partition, so
     partition parallelism cannot pay back a Spark job.
@@ -434,6 +434,8 @@ def _execute(spark: SparkSession, reader: IndexReader, tids: list[int], cols: li
     The driver routes run no Spark job: their postings are the resident
     copy's slice (``_driver_matched``) or, with none held, a pyarrow read
     (``reader.arrow_postings``)."""
+    tids = list(dfs)
+    est_bytes = sum(dfs.values()) * reader.bytes_per_posting
     # Tombstone mode: small delete sets ride the kernel call as a dict;
     # past the threshold they are unioned into the shard groups as
     # sentinel rows — never collected to the driver.
@@ -471,19 +473,29 @@ def _execute(spark: SparkSession, reader: IndexReader, tids: list[int], cols: li
     )
 
 
-def _query_terms(query: str | list[str], pattern: str | None) -> list[str]:
+def _query_terms(query: str | list[str], pattern: str) -> list[str]:
     if not isinstance(query, str):
         return list(dict.fromkeys(query))
-    return analyze_query(query, pattern) if pattern else analyze_query(query)
+    return analyze_query(query, pattern)
 
 
-def _ranked(spark: SparkSession, hits: pd.DataFrame, k: int | None) -> DataFrame:
-    """Driver-local kernel rows → the result frame: rounded, ordered by
-    (score DESC, doc_id ASC), the top ``k`` (all when k is None)."""
-    out = pd.DataFrame({"doc_id": hits["doc_id"].astype("int64"),
-                        "score": round_score(hits["raw"].to_numpy())})
-    out = out.sort_values(["score", "doc_id"], ascending=[False, True])
-    return spark.createDataFrame(out if k is None else out.head(k), schema=_RESULT_SCHEMA)
+def _top(spark: SparkSession, hits: pd.DataFrame | DataFrame, k: int | None) -> DataFrame:
+    """Kernel rows ``(doc_id, raw)`` → the result frame ``(doc_id,
+    score)``: scores rounded, ranked by (score DESC, doc_id ASC) and cut
+    to the top ``k``. Driver-local rows rank on the driver (one
+    ``createDataFrame``), Spark rows take Spark's global sort. With
+    ``k=None`` every row is returned, unordered on the distributed
+    routes: compound queries (query/ast.py) re-rank after their joins
+    and unions, so a range-partition shuffle there would be pure waste
+    (each AST leaf would pay a corpus-wide sorted shuffle whose order
+    the next join destroys)."""
+    if isinstance(hits, pd.DataFrame):
+        out = pd.DataFrame({"doc_id": hits["doc_id"].astype("int64"),
+                            "score": round_score(hits["raw"].to_numpy())})
+        out = out.sort_values(["score", "doc_id"], ascending=[False, True])
+        return spark.createDataFrame(out if k is None else out.head(k), schema=_RESULT_SCHEMA)
+    out = hits.select("doc_id", F.round("raw", ROUND_DIGITS).alias("score"))
+    return out if k is None else out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def bm25_topk_batch(
@@ -502,8 +514,7 @@ def bm25_topk_batch(
     (plan-asserted: tests/test_plans.py::
     test_msearch_distributed_single_postings_scan) and nothing persists
     in executor memory afterwards."""
-    pattern = getattr(reader, "settings", {}).get("token_pattern")
-    specs = [(_query_terms(q, pattern), mode) for q, mode in queries]
+    specs = [(_query_terms(q, reader.settings["token_pattern"]), mode) for q, mode in queries]
     all_terms = list(dict.fromkeys(t for terms, _ in specs for t in terms))
     if not all_terms:
         return [_empty_result(spark) for _ in specs]
@@ -524,12 +535,11 @@ def bm25_topk_batch(
                   for qid, (keep, kern) in kernels.items()]
         return pd.concat(frames, ignore_index=True)[["qid", "doc_id", "raw"]]
 
-    hits = _execute(spark, reader, list(dfs), _MATCH_COLS, batch_kernel,
-                    sum(dfs.values()) * reader.bytes_per_posting,
+    hits = _execute(spark, reader, dfs, _MATCH_COLS, batch_kernel,
                     schema="qid int, doc_id long, raw double")
     if isinstance(hits, DataFrame):
         hits = hits.toPandas()  # bounded: ≤ units × queries × k rows
-    return [_ranked(spark, hits[hits["qid"] == qid], k) if qid in kernels else _empty_result(spark)
+    return [_top(spark, hits[hits["qid"] == qid], k) if qid in kernels else _empty_result(spark)
             for qid in range(len(specs))]
 
 
@@ -549,7 +559,7 @@ def bm25_topk(
     and bool composition, which post-filter then re-rank).
     ``strategy``: 'auto' (byte-estimate choice), 'driver', or 'distributed'.
     """
-    terms = _query_terms(query, getattr(reader, "settings", {}).get("token_pattern"))
+    terms = _query_terms(query, reader.settings["token_pattern"])
     if not terms:
         return _empty_result(spark)
     tids = term_ids(spark, terms)
@@ -558,15 +568,5 @@ def bm25_topk(
         return _empty_result(spark)
     idfs = {t: _idf(reader.n_docs, d) for t, d in dfs.items()}
     kernel = _match_kernel(reader, idfs, k, mode, min_should, len(terms), return_all)
-    hits = _execute(spark, reader, list(dfs), _MATCH_COLS, kernel,
-                    sum(dfs.values()) * reader.bytes_per_posting, strategy)
-    if isinstance(hits, pd.DataFrame):
-        return _ranked(spark, hits, None if return_all else k)
-    out = hits.select("doc_id", F.round("raw", ROUND_DIGITS).alias("score"))
-    if return_all:
-        # No global sort: compound-query composition (query/ast.py)
-        # re-ranks after joins/unions, so a range-partition shuffle here
-        # would be pure waste — at scale each AST leaf would pay a
-        # corpus-wide sorted shuffle whose order the next join destroys.
-        return out
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    hits = _execute(spark, reader, dfs, _MATCH_COLS, kernel, strategy)
+    return _top(spark, hits, None if return_all else k)

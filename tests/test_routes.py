@@ -22,6 +22,7 @@ from pyspark.sql.group import GroupedData
 
 from go_mysql_elasticsearch_spark.index.build import build_index
 from go_mysql_elasticsearch_spark.index.reader import IndexReader
+from go_mysql_elasticsearch_spark.query import ast as A
 from go_mysql_elasticsearch_spark.query import phrase as P
 from go_mysql_elasticsearch_spark.query import wand as W
 from go_mysql_elasticsearch_spark.streaming.incremental import apply_changes
@@ -51,6 +52,10 @@ CASES = {
     "phrase_slop2": lambda s, r, st: _rows(P.match_phrase(s, r, "customer merge customer", k=10,
                                                           slop=2, strategy=st)),
     "phrase_prefix": lambda s, r, st: _rows(P.match_phrase_prefix(s, r, "hash jo", k=10)),
+    # both query families with k=None (every hit, unordered on the
+    # distributed routes), composed and ranked by Spark
+    "ast_bool": lambda s, r, st: _rows(A.topk(
+        s, r, A.Bool(must=(A.Match(("data",)),), should=(A.Phrase("hash join"),)), k=10)),
 }
 
 # route → (serving open, strategy, DRIVER_PATH_MAX_BYTES, TOMBSTONE_DICT_MAX)
@@ -73,7 +78,7 @@ def index(spark, tmp_path_factory):
     build_index(spark, docs, d, n_segments=3, n_shards=4, block_size=32)
     r = IndexReader(spark, d)
     victims = set()
-    for case in ("match_or", "match_and", "phrase_slop0", "phrase_prefix"):
+    for case in ("match_or", "match_and", "phrase_slop0", "phrase_prefix", "ast_bool"):
         victims |= {doc for doc, _ in CASES[case](spark, r, "auto")[:2]}
     dels = docs.where(F.col("doc_id").isin(sorted(victims))).withColumn("action", F.lit("delete"))
     apply_changes(spark, d, dels, n_shards=4)
@@ -146,8 +151,9 @@ def test_routes_agree(results, index, case):
 
 
 # phrase_prefix expands its prefix through Spark over the term
-# dictionary before it reads any postings
-@pytest.mark.parametrize("case", [c for c in CASES if c != "phrase_prefix"])
+# dictionary before it reads any postings, and ast_bool joins, orders
+# and limits its leaves' frames in Spark (topk's orderBy runs a job)
+@pytest.mark.parametrize("case", [c for c in CASES if c not in ("phrase_prefix", "ast_bool")])
 @pytest.mark.parametrize("route", ["resident", "pull"])
 def test_driver_routes_run_no_spark_job(results, route, case):
     """With serving closed the driver reads postings with pyarrow, and
@@ -176,6 +182,15 @@ def test_auto_phrase_on_small_serving_index_is_resident_and_jobless(spark, servi
     assert taken == {"resident"}
     assert n_jobs == 0
     assert rows == results["resident"]["phrase_slop0"][0]
+
+
+def test_all_negative_query_string_runs_no_spark_job(spark, serving):
+    """A query_string with no positive term returns the empty result
+    frame, whose collect runs no Spark job."""
+    from go_mysql_elasticsearch_spark.query.querystring import query_string_topk
+
+    rows, n_jobs = spark_jobs(spark, lambda: query_string_topk(spark, serving, "-scan").collect())
+    assert rows == [] and n_jobs == 0
 
 
 @pytest.mark.parametrize("strategy,route", [("driver", "resident"), ("distributed", "residency")])

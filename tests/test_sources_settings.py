@@ -9,6 +9,9 @@ from pyspark.sql import functions as F
 
 from go_mysql_elasticsearch_spark.index.build import build_index, build_segment
 from go_mysql_elasticsearch_spark.index.reader import IndexReader
+from go_mysql_elasticsearch_spark.query import ast as A
+from go_mysql_elasticsearch_spark.query.phrase import match_phrase
+from go_mysql_elasticsearch_spark.query.querystring import query_string_topk
 from go_mysql_elasticsearch_spark.query.scoring import analyze_query, bm25_naive
 from go_mysql_elasticsearch_spark.query.wand import bm25_topk
 from go_mysql_elasticsearch_spark.sources.ingest import (
@@ -46,7 +49,9 @@ def test_wildcard_discovery_and_union(spark):
 
 def test_index_settings_persist_and_apply(spark, tmp_path):
     """K5: custom analyzer pattern + BM25 params persist with the index
-    and drive both build and query; rank-identity holds under them."""
+    and drive both build and query; rank-identity holds under them for
+    every query family: match, phrase (direct and as an AST leaf) and
+    query_string."""
     idx = str(tmp_path / "custom_idx")
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     custom = {"token_pattern": "[a-z]+", "bm25_k1": 0.9, "bm25_b": 0.4}
@@ -55,17 +60,20 @@ def test_index_settings_persist_and_apply(spark, tmp_path):
         assert json.load(f)["bm25_k1"] == 0.9
     r = IndexReader(spark, idx)
     assert r.settings["token_pattern"] == "[a-z]+"
-    got = [
-        (x["doc_id"], x["score"])
-        for x in bm25_topk(spark, r, "data merge", k=10).collect()
-    ]
-    want = [
-        (x["doc_id"], x["score"])
-        for x in bm25_naive(
-            docs, analyze_query("data merge", "[a-z]+"), k1=0.9, b=0.4, pattern="[a-z]+"
-        ).collect()
-    ]
-    assert got == want
+
+    def rows(df):
+        return [(x["doc_id"], x["score"]) for x in df.collect()]
+
+    def want(query):
+        return rows(bm25_naive(docs, analyze_query(query, "[a-z]+"), k1=0.9, b=0.4,
+                               pattern="[a-z]+"))
+
+    assert rows(bm25_topk(spark, r, "data merge", k=10)) == want("data merge")
+    single = want("data")
+    assert len(single) == 10
+    assert rows(match_phrase(spark, r, "data", k=10)) == single
+    assert rows(A.topk(spark, r, A.Phrase("data"), k=10)) == single
+    assert rows(query_string_topk(spark, r, "data", k=10)) == single
 
 
 def test_settings_immutable_across_incremental_builds(spark, tmp_path):
