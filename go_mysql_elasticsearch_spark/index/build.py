@@ -26,6 +26,14 @@ Scale notes (the 10^12-doc story):
   bounded task memory regardless of corpus size.
 - The only Python in the build is the block packer (Arrow-batched,
   numpy-vectorized); tokenize/explode stay whole-stage-codegen JVM.
+
+A second writer, ``build_segment_local``, builds a small change batch
+(``streaming.incremental.apply_changes``) on the driver with no Spark
+job: the batch arrives already tokenized and hashed by the same JVM
+expressions, the same packer runs over its sorted token rows, and
+pyarrow writes the same files and column types. Both writers commit a
+segment through ``_write_manifest``, which also records the docstore
+schema so readers never infer it.
 """
 
 from __future__ import annotations
@@ -168,19 +176,13 @@ def _make_stream_packer(block_size: int, n_shards: int | None = None):
         gchg = np.flatnonzero((g_tid[1:] != g_tid[:-1]) | (g_shard[1:] != g_shard[:-1])) + 1
         bounds = np.concatenate(([0], gchg, [len(p_starts)])).astype(np.int64)
 
-        out_term, out_shard, out_bid = [], [], []
-        starts_all = []
-        for gi in range(len(bounds) - 1):
-            s, e = bounds[gi], bounds[gi + 1]
-            g_starts = np.arange(s, e, block_size)
-            starts_all.append(g_starts)
-            nb = len(g_starts)
-            out_term.append(np.repeat(g_tid[s], nb))
-            out_shard.append(np.repeat(g_shard[s], nb))
-            out_bid.append(np.arange(nb, dtype=np.int32))
-        starts = np.concatenate(starts_all)
-        grp_of_start = np.repeat(np.arange(len(bounds) - 1), [len(a) for a in starts_all])
-        ends = np.minimum(starts + block_size, np.asarray(bounds[1:])[grp_of_start])
+        # blocks: each group's postings cut every block_size, numbered
+        # from 0 within the group
+        n_blocks = -(-np.diff(bounds) // block_size)
+        grp_of_start = np.repeat(np.arange(len(n_blocks)), n_blocks)
+        block_id = np.arange(len(grp_of_start)) - np.repeat(np.cumsum(n_blocks) - n_blocks, n_blocks)
+        starts = bounds[grp_of_start] + block_id * block_size
+        ends = np.minimum(starts + block_size, bounds[1:][grp_of_start])
         # delta doc_ids, reset at block starts (block-local decodability)
         deltas = doc_ids.astype(np.uint64).copy()
         deltas[1:] -= doc_ids[:-1].astype(np.uint64)
@@ -202,9 +204,9 @@ def _make_stream_packer(block_size: int, n_shards: int | None = None):
         pv = memoryview(p_bytes)
         return pd.DataFrame(
             {
-                "tid": np.concatenate(out_term).astype(np.int64),
-                "shard": np.concatenate(out_shard).astype(np.int32),
-                "block_id": np.concatenate(out_bid),
+                "tid": g_tid[starts].astype(np.int64),
+                "shard": g_shard[starts].astype(np.int32),
+                "block_id": block_id.astype(np.int32),
                 "first_doc_id": doc_ids[starts],
                 "last_doc_id": doc_ids[ends - 1],
                 "n_docs": (ends - starts).astype(np.int32),
@@ -403,6 +405,32 @@ def build_segment(
     )
     laid_out.write.mode("overwrite").parquet(os.path.join(seg, "term_dict.parquet"))
     _mark("term_dict")
+    return _write_manifest(
+        seg,
+        segment_id,
+        n_docs=stats_row["n_docs"],
+        sum_dl=int(stats_row["sum_dl"] or 0),
+        doc_id_min=stats_row["doc_id_min"],
+        doc_id_max=stats_row["doc_id_max"],
+        term_count=term_count,
+        n_postings=int(pack_obs.get["n_postings"] or 0),
+        postings_bytes=int(pack_obs.get["postings_bytes"] or 0),
+        n_shards=n_shards,
+        block_size=block_size,
+        t0=t0,
+        phases=_timings,
+        docs_schema=docstore.schema,
+        extra=extra_manifest,
+    )
+
+
+def _write_manifest(seg: str, segment_id: int | str, *, t0: float, docs_schema: StructType,
+                    extra: dict | None = None, **stats) -> dict:
+    """Commit a segment: write its manifest atomically, last, after every
+    parquet dir under ``seg`` is complete (the one manifest writer of both
+    builds). ``docs_schema`` is recorded with every field nullable, as a
+    parquet read returns it, so the reader opens ``docs.parquet`` without
+    inferring its schema."""
     nbytes = sum(
         os.path.getsize(os.path.join(r, fn))
         for r, _, fns in os.walk(seg)
@@ -410,27 +438,132 @@ def build_segment(
     )
     manifest = {
         "segment_id": str(segment_id),
-        "n_docs": stats_row["n_docs"],
-        "sum_dl": int(stats_row["sum_dl"] or 0),
-        "doc_id_min": stats_row["doc_id_min"],
-        "doc_id_max": stats_row["doc_id_max"],
-        "term_count": term_count,
-        # exact packed-postings sizing: feeds the query-side byte-based
-        # driver-path threshold (estimated pull size, not posting count)
-        "n_postings": int(pack_obs.get["n_postings"] or 0),
-        "postings_bytes": int(pack_obs.get["postings_bytes"] or 0),
+        # n_docs, sum_dl, doc_id_min/max, term_count, n_postings,
+        # postings_bytes (exact packed sizing: feeds the query-side
+        # byte-based driver-path threshold), n_shards, block_size, phases
+        # (per-phase walls, s)
+        **stats,
         "bytes": nbytes,
-        "n_shards": n_shards,
-        "block_size": block_size,
         "wall_time_sec": round(time.time() - t0, 3),
-        "phases": _timings,  # per-phase walls (s): docstore, postings, term_dict
-        **(extra_manifest or {}),
+        "docs_schema": StructType([StructField(f.name, f.dataType) for f in docs_schema]).jsonValue(),
+        **(extra or {}),
     }
+    manifest_path = os.path.join(seg, "manifest.json")
     tmp = manifest_path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=1)
     os.replace(tmp, manifest_path)  # atomic, like canal/master.go:71-90
     return manifest
+
+
+def write_parquet_file(table, path: str, name: str = "part-00000.parquet") -> None:
+    """Write a pyarrow table as the file ``name`` of the parquet dir
+    ``path``, atomically: under a ``.``-prefixed temp name, which Spark,
+    pyarrow datasets and ``*.parquet`` globs all skip, then renamed into
+    place. The dir gets Spark's ``_SUCCESS`` marker."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(table, os.path.join(path, "." + name))
+    os.replace(os.path.join(path, "." + name), os.path.join(path, name))
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+
+
+def build_segment_local(
+    index_dir: str,
+    docs,
+    terms: list,
+    tids: list,
+    segment_id: int | str,
+    n_shards: int = 8,
+    block_size: int = BLOCK_SIZE,
+) -> dict:
+    """Build one segment on the driver from an analyzed batch small
+    enough to hold there: no Spark job. Same files, column types and
+    manifest fields as :func:`build_segment` over the same docs, except
+    that ``term_count`` is exact and each parquet dir holds one file.
+
+    ``docs`` is the docstore as a pyarrow table (``doc_id``, the
+    passthrough columns, ``dl`` int32) whose types map to Spark's one to
+    one (``from_arrow_schema``). ``terms[i]`` and ``tids[i]`` are row i's tokens and their
+    xxhash64 ids, as ``tokens_col`` and ``F.xxhash64`` give them with the
+    index's ``token_pattern``, or None for a null text. One tokenize
+    feeds all three outputs: the token rows, sorted by (tid, shard,
+    doc_id, pos), go through the build's packer, and the term dictionary
+    counts each doc's distinct terms."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+
+    t0 = time.time()
+    write_settings(index_dir, None)
+    seg = segment_dir(index_dir, segment_id)
+    shutil.rmtree(seg, ignore_errors=True)  # a crashed attempt's partial dir
+    timings: dict[str, float] = {}
+    write_parquet_file(docs, os.path.join(seg, "docs.parquet"))
+    timings["docstore"] = round(time.time() - t0, 2)
+
+    _t = time.time()
+    doc_id = docs.column("doc_id").to_numpy().astype(np.int64)
+    n_tok = np.fromiter((len(t) if t is not None else 0 for t in tids), np.int64, len(tids))
+    total = int(n_tok.sum())
+    tok_tid = np.fromiter((h for t in tids if t is not None for h in t), np.int64, total)
+    tok_doc = np.repeat(doc_id, n_tok)
+    tok_dl = np.repeat(n_tok, n_tok)
+    tok_pos = np.arange(total) - np.repeat(np.cumsum(n_tok) - n_tok, n_tok)
+    shard = tok_doc % n_shards
+    order = np.lexsort((tok_pos, tok_doc, shard, tok_tid))
+    tokens = pd.DataFrame({"tid": tok_tid[order], "doc_id": tok_doc[order],
+                           "dl": tok_dl[order], "pos": tok_pos[order]})
+    blocks = list(_make_stream_packer(block_size, n_shards)(iter([tokens])))
+    postings_schema = to_arrow_schema(POSTINGS_SCHEMA)
+    postings = (
+        pa.Table.from_pandas(pd.concat(blocks, ignore_index=True), schema=postings_schema,
+                             preserve_index=False)
+        if blocks else postings_schema.empty_table()
+    )
+    write_parquet_file(postings, os.path.join(seg, "postings.parquet"))
+    timings["postings"] = round(time.time() - _t, 2)
+
+    _t = time.time()
+    # term dictionary: df = number of docs holding the term (per-doc
+    # distinct), sorted by term (code-point order = Spark's UTF-8 order)
+    codes, uniq = pd.factorize(
+        np.fromiter((w for t in terms if t is not None for w in t), object, total))
+    pairs = np.unique(np.repeat(np.arange(len(n_tok)), n_tok) * len(uniq) + codes)
+    term_tid = np.zeros(len(uniq), dtype=np.int64)
+    term_tid[codes] = tok_tid  # one hash per term
+    by_term = np.argsort(uniq, kind="stable")
+    term_dict = pa.table({
+        "term": pa.array(uniq[by_term], pa.string()),
+        "df": pa.array(np.bincount(pairs % max(len(uniq), 1), minlength=len(uniq))[by_term],
+                       pa.int64()),
+        "tid": pa.array(term_tid[by_term], pa.int64()),
+    })
+    write_parquet_file(term_dict, os.path.join(seg, "term_dict.parquet"))
+    timings["term_dict"] = round(time.time() - _t, 2)
+
+    return _write_manifest(
+        seg,
+        segment_id,
+        n_docs=docs.num_rows,
+        sum_dl=pc.sum(docs.column("dl")).as_py() or 0,
+        doc_id_min=int(doc_id.min()),
+        doc_id_max=int(doc_id.max()),
+        term_count=len(np.unique(tok_tid)),
+        n_postings=pc.sum(postings.column("n_docs")).as_py() or 0,
+        postings_bytes=sum(
+            pc.sum(pc.binary_length(postings.column(c))).as_py() or 0
+            for c in ("docs_vb", "tfs_vb", "dls_vb", "pos_vb")
+        ),
+        n_shards=n_shards,
+        block_size=block_size,
+        t0=t0,
+        phases=timings,
+        docs_schema=from_arrow_schema(docs.schema),
+    )
 
 
 def build_index(

@@ -7,9 +7,10 @@ contract as the reference's binlog checkpoint: canal/master.go:16-45).
 
 Format floor: a served segment must carry the manifest byte counters
 ``n_postings`` / ``postings_bytes`` (v4, written together with the
-``pos_vb`` position payloads) and a build-time ``term_dict.parquet``
-(v5). ``IndexReader`` refuses any older segment when it opens, so the
-query path assumes those artifacts everywhere and has no fallbacks.
+``pos_vb`` position payloads), a build-time ``term_dict.parquet`` (v5)
+and the docstore schema ``docs_schema`` (v6). ``IndexReader`` refuses
+any older segment when it opens, so the query path assumes those
+artifacts everywhere and has no fallbacks.
 
 Segments are immutable, so what a reader derives from one segment is
 held once per process and shared by every reader that serves it
@@ -32,6 +33,7 @@ import os
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .build import POSTINGS_SCHEMA, gen_root
 
@@ -49,7 +51,8 @@ _AQE_STATE: dict = {}
 _SEGMENTS: dict[tuple, dict] = {}
 
 # Known parquet schemas: reading with one skips the schema-inference
-# job. docs.parquet infers, because its passthrough columns vary.
+# job. docs.parquet's passthrough columns vary by segment, so its schema
+# comes from the segment's manifest (``docs_schema``).
 _SCHEMAS = {
     "postings.parquet": POSTINGS_SCHEMA,
     "term_dict.parquet": "term string, df long, tid long",
@@ -126,12 +129,12 @@ class IndexReader:
         # the format floor (module docstring) — the one place that tests
         # for these artifacts
         for m, key in zip(self.manifests, keys):
-            missing = [k for k in ("n_postings", "postings_bytes") if k not in m]
+            missing = [k for k in ("n_postings", "postings_bytes", "docs_schema") if k not in m]
             if not os.path.exists(os.path.join(key[1], "term_dict.parquet", "_SUCCESS")):
                 missing.append("term_dict.parquet")
             if missing:
                 raise ValueError(
-                    f"segment {m['segment_id']} of {index_dir} predates the v5 segment format "
+                    f"segment {m['segment_id']} of {index_dir} predates the v6 segment format "
                     f"(missing {', '.join(missing)}); rebuild the index from its source"
                 )
 
@@ -161,19 +164,18 @@ class IndexReader:
     def _union(self, name: str) -> DataFrame:
         """Union of every served segment's ``name`` parquet, built once
         per reader over per-segment relations that are read once per
-        process (``_SEGMENTS``). A file with a known schema (``_SCHEMAS``)
-        is read with it and runs no job; ``docs.parquet`` infers its
-        schema, one job per segment the first time the process sees it."""
+        process (``_SEGMENTS``). Every file is read with its known schema
+        (``_SCHEMAS``, or the manifest's ``docs_schema`` for
+        ``docs.parquet``), so no read runs a schema-inference job."""
         out = self._relations.get(name)
         if out is None:
-            schema = _SCHEMAS.get(name)
             dfs = []
             for m, key in zip(self.manifests, self._seg_keys):
                 st = _SEGMENTS.setdefault(key, {})
                 if name not in st:
-                    rd = self.spark.read if schema is None else self.spark.read.schema(schema)
-                    st[name] = rd.parquet(os.path.join(key[1], name)).withColumn(
-                        "segment", F.lit(str(m["segment_id"])))
+                    schema = _SCHEMAS.get(name) or StructType.fromJson(m["docs_schema"])
+                    st[name] = self.spark.read.schema(schema).parquet(
+                        os.path.join(key[1], name)).withColumn("segment", F.lit(str(m["segment_id"])))
                 dfs.append(st[name])
             out = dfs[0]
             for d in dfs[1:]:

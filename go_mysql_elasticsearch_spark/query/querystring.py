@@ -20,6 +20,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from ..analyzer import TOKEN_PATTERN
+
 _TOKEN = re.compile(r'"([^"]*)"|(\S+)')
 
 
@@ -49,24 +51,26 @@ def render_template(source: str, params: dict) -> str:
     return out
 
 
-def parse_query_string(q: str) -> ParsedQuery:
+def parse_query_string(q: str, pattern: str = TOKEN_PATTERN) -> ParsedQuery:
+    """Parse ``q``, analyzing every word and phrase with the index's
+    ``token_pattern``."""
     from .scoring import analyze_query
 
     out = ParsedQuery()
     for m in _TOKEN.finditer(q):
         phrase, word = m.group(1), m.group(2)
         if phrase is not None:
-            words = analyze_query(phrase)
+            words = analyze_query(phrase, pattern)
             if len(words) == 1:
                 out.must.append(words[0])
             elif words:
                 out.phrases.append(words)
         elif word.startswith("+"):
-            out.must.extend(analyze_query(word[1:]))
+            out.must.extend(analyze_query(word[1:], pattern))
         elif word.startswith("-"):
-            out.must_not.extend(analyze_query(word[1:]))
+            out.must_not.extend(analyze_query(word[1:], pattern))
         else:
-            out.should.extend(analyze_query(word))
+            out.should.extend(analyze_query(word, pattern))
     return out
 
 
@@ -81,7 +85,7 @@ def query_string_topk(spark, reader, q: str, k: int = 10):
     from .scoring import ROUND_DIGITS
     from .wand import _empty_result, bm25_topk, term_ids
 
-    pq = parse_query_string(q)
+    pq = parse_query_string(q, reader.settings["token_pattern"])
     pos = pq.positive_terms
     if not pos:
         return _empty_result(spark)

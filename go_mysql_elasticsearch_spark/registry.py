@@ -28,7 +28,7 @@ IDX_CACHE_ROOT = os.environ.get("SPARK_GRAFT_IDX_CACHE", os.path.join(REPO_ROOT,
 
 # Bump whenever the on-disk index format or analyzer defaults change —
 # salts the cache key so stale-format indexes are rebuilt, not reused.
-INDEX_FORMAT_VERSION = "5"  # v5: build-time per-segment term_dict side-output (v4: pos_vb)
+INDEX_FORMAT_VERSION = "6"  # v6: docs_schema in the manifest (v5: term_dict, v4: pos_vb)
 
 _READERS: dict[str, IndexReader] = {}
 _URL_READERS: dict[str, IndexReader] = {}

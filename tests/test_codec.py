@@ -142,3 +142,49 @@ def test_unpack_blocks_batch_matches_per_block(blocks):
     flat, off = unpack_positions_batch(pos_bufs, all_tfs)
     assert flat.tolist() == np.concatenate(exp_pos).tolist()
     assert off.tolist() == (np.cumsum(all_tfs) - all_tfs).tolist()
+
+
+@given(
+    st.lists(st.tuples(st.integers(0, 6), st.integers(0, 60), st.integers(0, 9)),
+             min_size=1, max_size=400),
+    st.sampled_from([1, 2, 3, 128]),
+    st.sampled_from([1, 2, 8]),
+)
+@settings(max_examples=60, deadline=None)
+def test_stream_packer_blocks_match_per_group_loop(tokens, block_size, n_shards):
+    """The build's packer cuts each (tid, shard) posting list into blocks
+    of block_size postings, numbered from 0: checked against a per-group
+    loop over the same sorted token rows."""
+    import pandas as pd
+
+    from go_mysql_elasticsearch_spark.index.build import _make_stream_packer
+    from go_mysql_elasticsearch_spark.index.codec import unpack_blocks_batch
+
+    tid, doc, pos = (np.array(c, dtype=np.int64) for c in zip(*tokens))
+    order = np.lexsort((pos, doc, doc % n_shards, tid))
+    rows = pd.DataFrame({"tid": tid[order], "doc_id": doc[order], "dl": doc[order] % 5 + 1,
+                         "pos": pos[order]})
+    # split into batches so groups carry across batch boundaries
+    cut = len(rows) // 2
+    out = pd.concat(list(_make_stream_packer(block_size, n_shards)(
+        iter([rows.iloc[:cut], rows.iloc[cut:]]))), ignore_index=True)
+
+    want = []
+    postings = rows.groupby(["tid", "doc_id"], sort=False).agg(tf=("pos", "size"), dl=("dl", "first"))
+    postings = postings.reset_index()
+    postings["shard"] = postings["doc_id"] % n_shards
+    for (t, s), g in postings.groupby(["tid", "shard"], sort=True):
+        g = g.sort_values("doc_id")
+        for b, start in enumerate(range(0, len(g), block_size)):
+            blk = g.iloc[start:start + block_size]
+            want.append((t, s, b, blk["doc_id"].tolist(), blk["tf"].tolist(), blk["dl"].tolist()))
+    docs, tfs, dls, counts = unpack_blocks_batch(
+        out["docs_vb"].to_numpy(), out["tfs_vb"].to_numpy(), out["dls_vb"].to_numpy())
+    ends = np.cumsum(counts)
+    got = [(r.tid, r.shard, r.block_id, docs[e - n:e].tolist(), tfs[e - n:e].tolist(),
+            dls[e - n:e].tolist())
+           for r, n, e in zip(out.itertuples(), counts, ends)]
+    assert sorted(got) == sorted(want)
+    assert (out["n_docs"] == counts).all()
+    assert out["first_doc_id"].tolist() == [g[3][0] for g in got]
+    assert out["last_doc_id"].tolist() == [g[3][-1] for g in got]

@@ -1,7 +1,8 @@
 """Format floor: IndexReader serves only segments that carry the
-manifest byte counters (v4, written with pos_vb) and a build-time
-term_dict.parquet (v5); an older segment is refused at open with an
-error naming the segment and the missing artifact."""
+manifest byte counters (v4, written with pos_vb), a build-time
+term_dict.parquet (v5) and the manifest's docs_schema (v6); an older
+segment is refused at open with an error naming the segment and the
+missing artifact."""
 
 import json
 import os
@@ -27,13 +28,21 @@ def _drop_term_dict(idx):
     shutil.rmtree(os.path.join(segment_dir(idx, 0), "term_dict.parquet"))
 
 
-def _drop_postings_bytes(idx):
+def _drop_manifest_key(idx, key):
     mp = os.path.join(segment_dir(idx, 0), "manifest.json")
     with open(mp) as f:
         m = json.load(f)
-    del m["postings_bytes"]
+    del m[key]
     with open(mp, "w") as f:
         json.dump(m, f)
+
+
+def _drop_postings_bytes(idx):
+    _drop_manifest_key(idx, "postings_bytes")
+
+
+def _drop_docs_schema(idx):
+    _drop_manifest_key(idx, "docs_schema")
 
 
 def test_intact_segment_opens(spark, built):
@@ -42,7 +51,8 @@ def test_intact_segment_opens(spark, built):
 
 @pytest.mark.parametrize(
     "mutate, artifact",
-    [(_drop_term_dict, "term_dict.parquet"), (_drop_postings_bytes, "postings_bytes")],
+    [(_drop_term_dict, "term_dict.parquet"), (_drop_postings_bytes, "postings_bytes"),
+     (_drop_docs_schema, "docs_schema")],
 )
 def test_pre_v5_segment_refused(spark, built, tmp_path, mutate, artifact):
     idx = str(tmp_path / "old")

@@ -88,6 +88,44 @@ def test_reinsert_after_delete(spark, idx):
     assert [d for d, _ in _hits(spark, idx, ["backfromthedead"])] == [2]
 
 
+def test_spark_build_gives_same_reader_results(spark, idx, tmp_path, monkeypatch):
+    """The update / delete / insert / delete-then-reinsert scenario
+    through the driver build (the default cap) and again through the
+    Spark build (cap 0): readers over both indexes give the same
+    results."""
+    import shutil
+
+    from go_mysql_elasticsearch_spark.streaming import incremental
+
+    other = str(tmp_path / "spark_build")
+    shutil.copytree(idx, other)
+    batches = [
+        _mkdocs(spark, [(0, "u0", "en", "zzzreplaced content only"), (3, "u3", "en", "x")])
+        .withColumn("action", F.when(F.col("doc_id") == 0, "update").otherwise("delete")),
+        _mkdocs(spark, [(90001, "u90001", "en", "qqqnewterm appears here qqqnewterm")])
+        .withColumn("action", F.lit("insert")),
+        _mkdocs(spark, [(2, "u2", "en", "x"), (2, "u2", "en", "backfromthedead the data")])
+        .withColumn("action", F.when(F.col("text") == "x", "delete").otherwise("insert")),
+    ]
+
+    def view(d):
+        r = IndexReader(spark, d)
+        hits = [_hits(spark, d, q, k=10) for q in (["the", "data"], ["qqqnewterm"],
+                                                  ["zzzreplaced"], ["backfromthedead"])]
+        docs = sorted(tuple(x) for x in r.docstore().collect())
+        return hits, docs, r.n_docs, r.avgdl, r.tombstones_map()
+
+    for b in batches:
+        apply_changes(spark, idx, b, n_shards=2)
+    monkeypatch.setattr(incremental, "DRIVER_BUILD_MAX_EVENTS", 0)
+    for b in batches:
+        apply_changes(spark, other, b, n_shards=2)
+    monkeypatch.undo()
+    got, want = view(idx), view(other)
+    assert got == want
+    assert [d for d, _ in got[0][3]] == [2] and 3 not in {x[0] for x in got[1]}
+
+
 def _flat_postings_set(spark, idx):
     r = IndexReader(spark, idx)
     return {

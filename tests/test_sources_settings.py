@@ -47,15 +47,24 @@ def test_wildcard_discovery_and_union(spark):
     assert ("doc_id", "bigint") in describe_source(u)
 
 
-def test_index_settings_persist_and_apply(spark, tmp_path):
+CUSTOM = {"token_pattern": "[a-z]+", "bm25_k1": 0.9, "bm25_b": 0.4}
+
+
+@pytest.fixture(scope="module")
+def custom_idx(spark, tmp_path_factory):
+    idx = str(tmp_path_factory.mktemp("custom") / "custom_idx")
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    build_index(spark, docs, idx, n_segments=1, n_shards=2, settings=CUSTOM)
+    return idx
+
+
+def test_index_settings_persist_and_apply(spark, custom_idx):
     """K5: custom analyzer pattern + BM25 params persist with the index
     and drive both build and query; rank-identity holds under them for
     every query family: match, phrase (direct and as an AST leaf) and
     query_string."""
-    idx = str(tmp_path / "custom_idx")
+    idx = custom_idx
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    custom = {"token_pattern": "[a-z]+", "bm25_k1": 0.9, "bm25_b": 0.4}
-    build_index(spark, docs, idx, n_segments=1, n_shards=2, settings=custom)
     with open(os.path.join(idx, "settings.json")) as f:
         assert json.load(f)["bm25_k1"] == 0.9
     r = IndexReader(spark, idx)
@@ -74,6 +83,20 @@ def test_index_settings_persist_and_apply(spark, tmp_path):
     assert rows(match_phrase(spark, r, "data", k=10)) == single
     assert rows(A.topk(spark, r, A.Phrase("data"), k=10)) == single
     assert rows(query_string_topk(spark, r, "data", k=10)) == single
+
+
+def test_query_string_analyzes_with_index_pattern(spark, custom_idx):
+    """query_string terms go through the index's token_pattern: on a
+    ``[a-z]+`` index ``+data2`` analyzes to the must term ``data`` (the
+    default pattern would keep ``data2``, which no doc of this index can
+    hold, and the gate would drop every hit)."""
+    r = IndexReader(spark, custom_idx)
+
+    def rows(q):
+        return [(x["doc_id"], x["score"]) for x in query_string_topk(spark, r, q, k=10).collect()]
+
+    got = rows("+data2 merge")
+    assert got and got == rows("+data merge")
 
 
 def test_settings_immutable_across_incremental_builds(spark, tmp_path):
