@@ -476,7 +476,6 @@ def build_segment_local(
     tids: list,
     segment_id: int | str,
     n_shards: int = 8,
-    block_size: int = BLOCK_SIZE,
 ) -> dict:
     """Build one segment on the driver from an analyzed batch small
     enough to hold there: no Spark job. Same files, column types and
@@ -517,7 +516,7 @@ def build_segment_local(
     order = np.lexsort((tok_pos, tok_doc, shard, tok_tid))
     tokens = pd.DataFrame({"tid": tok_tid[order], "doc_id": tok_doc[order],
                            "dl": tok_dl[order], "pos": tok_pos[order]})
-    blocks = list(_make_stream_packer(block_size, n_shards)(iter([tokens])))
+    blocks = list(_make_stream_packer(BLOCK_SIZE, n_shards)(iter([tokens])))
     postings_schema = to_arrow_schema(POSTINGS_SCHEMA)
     postings = (
         pa.Table.from_pandas(pd.concat(blocks, ignore_index=True), schema=postings_schema,
@@ -559,7 +558,7 @@ def build_segment_local(
             for c in ("docs_vb", "tfs_vb", "dls_vb", "pos_vb")
         ),
         n_shards=n_shards,
-        block_size=block_size,
+        block_size=BLOCK_SIZE,
         t0=t0,
         phases=timings,
         docs_schema=from_arrow_schema(docs.schema),

@@ -15,12 +15,13 @@ binlog and turns RowsEvents into ES bulk index/update/delete requests
 
 The build is chosen by burst size ("To Share, or not to Share",
 SIGMOD 2021, picks its plan the same way). A batch of at most
-``DRIVER_BUILD_MAX_EVENTS`` events is collected once, tokenized and
-hashed by Spark's own expressions, collapsed on the driver and written
-with pyarrow (``build_segment_local``): one tokenize feeds the
-docstore, the postings and the term dictionary, and a local-relation
-batch runs no Spark job. A larger batch collapses with a window and
-takes the distributed ``build_segment``.
+``DRIVER_BUILD_MAX_EVENTS`` events is collected once as raw events and
+collapsed on the driver; its surviving docs are tokenized and hashed by
+Spark's own expressions over a local relation and written with pyarrow
+(``build_segment_local``): one tokenize feeds the docstore, the
+postings and the term dictionary, and a local-relation batch runs no
+Spark job. A larger batch collapses with a window and takes the
+distributed ``build_segment``.
 
 Collection stats (N, avgdl, df) keep counting tombstoned postings until
 ``compact()`` rebuilds from live docs — the same smeared-stats behavior
@@ -77,15 +78,15 @@ def _next_segment_id(index_dir: str) -> int:
 
 
 # A change batch of at most this many events is built on the driver
-# (``build_segment_local``: one collect, pyarrow writes, no Spark job on
-# a local relation); a larger one takes the Spark build. Measured on 4
-# CPUs over perfbench change batches (apply_changes, median of 3): the
-# driver build takes 0.85 / 2.2 / 3.8 / 6.1 s at 1,500 / 5,000 /
-# 10,000 / 15,000 events, the Spark build 3.6 / 5.0 / 5.1 / 6.0 s; they
-# meet near 15,000. A batch over the cap first pays the bounded collect
-# (1.4 s at 5,000 events, 2.5 s at 10,000), so the cap sits below the
-# meeting point, where the driver build's gain (2.8 s at 5,000) still
-# exceeds that loss.
+# (``build_segment_local``: a raw collect, a tokenize over a local
+# relation, pyarrow writes, no Spark job on a local relation); a larger
+# one takes the Spark build. Measured on 4 CPUs over perfbench change
+# batches against a 20,000-doc index (apply_changes, median of 3): the
+# driver build takes 0.80 / 1.85 / 3.7 / 5.3 s at 1,500 / 5,000 /
+# 10,000 / 15,000 events, the Spark build 2.9 / 3.3 / 3.8 / 4.6 s; they
+# meet near 10,000. A batch over the cap first pays the raw collect
+# (about 0.1 s at 5,000 events, 0.2-0.4 s at 10,000), so the cap sits at
+# half the meeting point, where the driver build still gains 1.4 s.
 DRIVER_BUILD_MAX_EVENTS = 5_000
 
 # Column types the driver build writes exactly as Spark's parquet writer
@@ -116,17 +117,19 @@ def apply_changes(
     explicit log position can pre-sort.
 
     Two builds, chosen by burst size. A batch of at most
-    ``DRIVER_BUILD_MAX_EVENTS`` events is read once, already tokenized
-    and hashed by Spark's own expressions (a bounded collect: 0 jobs on
-    a local relation, one per partition-scan round on a file-backed
-    batch), collapsed in numpy and written with pyarrow: tombstones,
-    then the segment through ``build_segment_local``. A larger batch
-    collapses with one batch-sized window and takes ``build_segment``.
+    ``DRIVER_BUILD_MAX_EVENTS`` events is read once as raw events (a
+    bounded collect: 0 jobs on a local relation, one per partition-scan
+    round on a file-backed batch), collapsed in numpy and written with
+    pyarrow: tombstones, then the segment through
+    ``build_segment_local``, its docs tokenized by Spark's expressions
+    over a local relation. A larger batch pays only that raw collect,
+    then collapses with one batch-sized window and takes
+    ``build_segment``.
     Both write the tombstone file before the segment's manifest
     (``snapshot`` relies on that order)."""
-    small = _collect_small(index_dir, changes)
+    small = _collect_small(changes)
     if small is not None:
-        return _apply_rows(index_dir, *small, changes.schema, n_shards)
+        return _apply_rows(spark, index_dir, *small, changes.schema, n_shards)
     from pyspark.sql import Window
 
     w = Window.partitionBy("doc_id")
@@ -173,36 +176,46 @@ def apply_changes(
         changes.unpersist()
 
 
-def _collect_small(index_dir: str, changes: DataFrame) -> tuple[list[str], list] | None:
+def _collect_small(changes: DataFrame) -> tuple[list[str], list] | None:
     """``(docstore columns, rows)`` of a batch of at most
     DRIVER_BUILD_MAX_EVENTS events, or None for a larger batch or one
-    the driver build cannot write. Each row is ``(action, *columns,
-    tokens, tids, dl)``: tokens from ``tokens_col`` with the index's
-    pattern, their ``xxhash64`` ids and Spark's ``size`` of them, so the
-    driver build analyzes exactly as the JVM build does. Timestamps come
-    as ``unix_micros``: a ``collect()`` would turn them into datetimes
-    in the Python process's local time zone."""
-    from ..index.indices import get_settings
-
+    the driver build cannot write. Each row is ``(action, *columns)``:
+    raw events, so a batch over the cap pays only this collect before
+    the Spark build. Timestamps come as ``unix_micros``: a ``collect()``
+    would turn them into datetimes in the Python process's local time
+    zone."""
     cols = [c for c in DOC_COLS if c in changes.columns]
     types = {f.name: f.dataType for f in changes.schema}
     if ("doc_id" not in cols or "text" not in cols
             or not isinstance(types["doc_id"], (LongType, IntegerType))
+            or not isinstance(types["text"], StringType)
             or not all(isinstance(types[c], _DRIVER_TYPES) for c in cols)):
         return None
-    toks = tokens_col("text", pattern=get_settings(index_dir)["token_pattern"])
     rows = changes.select(
         "action",
         *[F.unix_micros(c).alias(c) if isinstance(types[c], TimestampType) else c for c in cols],
-        toks.alias("_toks"),
-        F.transform(toks, lambda t: F.xxhash64(t)).alias("_tids"),
-        F.size(toks).alias("dl"),
     ).limit(DRIVER_BUILD_MAX_EVENTS + 1).collect()
     return (cols, rows) if len(rows) <= DRIVER_BUILD_MAX_EVENTS else None
 
 
-def _apply_rows(index_dir: str, cols: list[str], rows: list, schema: StructType,
-                n_shards: int) -> dict | None:
+def _analyze(spark: SparkSession, index_dir: str, texts) -> list:
+    """``(tokens, tids, dl)`` per text of the pyarrow string array
+    ``texts``: ``tokens_col`` with the index's pattern, their
+    ``xxhash64`` ids and Spark's ``size`` of them, run by Spark over a
+    local relation of the texts (no Spark job), so the driver build
+    analyzes exactly as the JVM build does."""
+    import pyarrow as pa
+
+    from ..index.indices import get_settings
+
+    toks = tokens_col("text", pattern=get_settings(index_dir)["token_pattern"])
+    return spark.createDataFrame(pa.table({"text": texts})).select(
+        toks, F.transform(toks, lambda t: F.xxhash64(t)), F.size(toks)
+    ).collect()
+
+
+def _apply_rows(spark: SparkSession, index_dir: str, cols: list[str], rows: list,
+                schema: StructType, n_shards: int) -> dict | None:
     """The driver half of :func:`apply_changes` over collected rows."""
     if not rows:
         return None
@@ -211,7 +224,7 @@ def _apply_rows(index_dir: str, cols: list[str], rows: list, schema: StructType,
 
     root = gen_root(index_dir)
     new_seg = _next_segment_id(index_dir)
-    col = dict(zip(["action", *cols, "_toks", "_tids", "dl"], zip(*rows)))
+    col = dict(zip(["action", *cols], zip(*rows)))
     doc_id = np.asarray(col["doc_id"], dtype=np.int64)
     # the last event per doc_id: np.unique's first index in the reversed
     # batch
@@ -238,15 +251,10 @@ def _apply_rows(index_dir: str, cols: list[str], rows: list, schema: StructType,
         t = to_arrow_type(schema[c].dataType)
         docs[c] = (pa.array(vals, pa.int64()).cast(t) if isinstance(schema[c].dataType, TimestampType)
                    else pa.array(vals, t))
-    docs["dl"] = pa.array([col["dl"][i] for i in keep], pa.int32())
-    return build_segment_local(
-        root,
-        pa.table(docs),
-        [col["_toks"][i] for i in keep],
-        [col["_tids"][i] for i in keep],
-        segment_id=new_seg,
-        n_shards=n_shards,
-    )
+    terms, tids, dl = zip(*_analyze(spark, index_dir, docs["text"]))
+    docs["dl"] = pa.array(dl, pa.int32())
+    return build_segment_local(root, pa.table(docs), list(terms), list(tids),
+                               segment_id=new_seg, n_shards=n_shards)
 
 
 def compact(
@@ -490,7 +498,9 @@ def update_by_query(
     ``ctx._source.<field> = <expr>`` assignments as ONE Catalyst
     projection over the matched doc set, and feed the result through
     the standard update path (tombstone old version + new segment).
-    Fully distributed — matched ids never visit the driver. Returns the
+    An update of at most ``DRIVER_BUILD_MAX_EVENTS`` docs is built on
+    the driver by ``apply_changes``' driver build; a larger one stays
+    distributed, its matched ids never visiting the driver. Returns the
     number of docs updated."""
     from ..query.script import parse_update_script, spark_fields, to_column
     from ..query.wand import bm25_topk
