@@ -31,9 +31,14 @@ A second writer, ``build_segment_local``, builds a small change batch
 (``streaming.incremental.apply_changes``) on the driver with no Spark
 job: the batch arrives already tokenized and hashed by the same JVM
 expressions, the same packer runs over its sorted token rows, and
-pyarrow writes the same files and column types. Both writers commit a
-segment through ``_write_manifest``, which also records the docstore
-schema so readers never infer it.
+pyarrow writes the same files and column types. A third writer,
+``merge_segments_local``, serves ``compact`` and ``merge_segments`` on
+small sources: it reads their segment files with pyarrow, decodes the
+postings, drops the versions the tombstones kill and re-packs the live
+token rows with the same packer, so nothing is re-analyzed and no Spark
+job runs. All three commit a segment through ``_write_manifest``, which
+also records the docstore schema so readers never infer it, and write
+the term dictionary with Spark's column types and nullability.
 """
 
 from __future__ import annotations
@@ -48,12 +53,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    DoubleType,
+    ByteType,
     IntegerType,
     LongType,
-    StringType,
+    ShortType,
     StructField,
     StructType,
+    TimestampNTZType,
+    TimestampType,
 )
 
 from ..analyzer import BM25_B, BM25_K1, TOKEN_PATTERN, tokens_col
@@ -104,6 +111,11 @@ POSTINGS_SCHEMA = StructType(
         StructField("pos_vb", BinaryType()),
     ]
 )
+
+
+# Stored columns a build carries from its input into the docstore,
+# between ``doc_id`` and ``dl``.
+PASSTHROUGH = ("url", "warc_ts", "lang", "text", "_parent")
 
 
 def segment_dir(index_dir: str, segment_id: int | str) -> str:
@@ -286,7 +298,7 @@ def build_segment(
     target_parts = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < max(2, target_parts // 2):
         docs = docs.repartition(target_parts)
-    passthrough = [c for c in ("url", "warc_ts", "lang", "text", "_parent") if c in docs.columns]
+    passthrough = [c for c in PASSTHROUGH if c in docs.columns]
     base = docs.select(
         "doc_id", *passthrough, tokens_col("text", pattern=token_pattern).alias("_toks")
     ).withColumn("dl", F.size("_toks"))
@@ -460,13 +472,63 @@ def write_parquet_file(table, path: str, name: str = "part-00000.parquet") -> No
     """Write a pyarrow table as the file ``name`` of the parquet dir
     ``path``, atomically: under a ``.``-prefixed temp name, which Spark,
     pyarrow datasets and ``*.parquet`` globs all skip, then renamed into
-    place. The dir gets Spark's ``_SUCCESS`` marker."""
+    place. The dir gets Spark's ``_SUCCESS`` marker. A tz-aware timestamp
+    column is stored as INT96, as Spark's parquet writer stores a
+    ``timestamp`` (``spark.sql.parquet.outputTimestampType``'s default),
+    so both writers' files read back with one Arrow schema."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
+    int96 = any(pa.types.is_timestamp(f.type) and f.type.tz is not None for f in table.schema)
     os.makedirs(path, exist_ok=True)
-    pq.write_table(table, os.path.join(path, "." + name))
+    pq.write_table(table, os.path.join(path, "." + name), use_deprecated_int96_timestamps=int96)
     os.replace(os.path.join(path, "." + name), os.path.join(path, name))
     open(os.path.join(path, "_SUCCESS"), "w").close()
+
+
+_PACK_BATCH = 1 << 20
+
+
+def _write_postings(seg: str, tokens: pd.DataFrame, n_shards: int) -> dict:
+    """Pack token rows ``(tid, doc_id, dl, pos)`` sorted by (tid, shard,
+    doc_id, pos) with the build's packer and write them as the segment's
+    ``postings.parquet``; returns the manifest's postings counters. The
+    packer takes the rows in batches of ``_PACK_BATCH``, as it takes
+    Arrow batches in the Spark build, so its temporaries stay bounded."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    blocks = list(_make_stream_packer(BLOCK_SIZE, n_shards)(
+        tokens.iloc[i:i + _PACK_BATCH] for i in range(0, len(tokens), _PACK_BATCH)))
+    schema = to_arrow_schema(POSTINGS_SCHEMA)
+    postings = (
+        pa.Table.from_pandas(pd.concat(blocks, ignore_index=True), schema=schema, preserve_index=False)
+        if blocks else schema.empty_table()
+    )
+    write_parquet_file(postings, os.path.join(seg, "postings.parquet"))
+    return {
+        "n_postings": pc.sum(postings.column("n_docs")).as_py() or 0,
+        "postings_bytes": sum(
+            pc.sum(pc.binary_length(postings.column(c))).as_py() or 0
+            for c in ("docs_vb", "tfs_vb", "dls_vb", "pos_vb")
+        ),
+    }
+
+
+def _write_term_dict(seg: str, terms: np.ndarray, tids: np.ndarray, dfs: np.ndarray) -> None:
+    """Write the segment's ``term_dict.parquet`` sorted by term (code-point
+    order = Spark's UTF-8 order), with the Spark build's types and
+    nullability (``df`` and ``tid`` not null)."""
+    import pyarrow as pa
+
+    by_term = np.argsort(terms, kind="stable")
+    write_parquet_file(pa.table(
+        [pa.array(terms[by_term], pa.string()), pa.array(dfs[by_term], pa.int64()),
+         pa.array(tids[by_term], pa.int64())],
+        schema=pa.schema([("term", pa.string()), pa.field("df", pa.int64(), nullable=False),
+                          pa.field("tid", pa.int64(), nullable=False)]),
+    ), os.path.join(seg, "term_dict.parquet"))
 
 
 def build_segment_local(
@@ -492,9 +554,8 @@ def build_segment_local(
     counts each doc's distinct terms."""
     import shutil
 
-    import pyarrow as pa
     import pyarrow.compute as pc
-    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     t0 = time.time()
     write_settings(index_dir, None)
@@ -512,36 +573,22 @@ def build_segment_local(
     tok_doc = np.repeat(doc_id, n_tok)
     tok_dl = np.repeat(n_tok, n_tok)
     tok_pos = np.arange(total) - np.repeat(np.cumsum(n_tok) - n_tok, n_tok)
-    shard = tok_doc % n_shards
-    order = np.lexsort((tok_pos, tok_doc, shard, tok_tid))
-    tokens = pd.DataFrame({"tid": tok_tid[order], "doc_id": tok_doc[order],
-                           "dl": tok_dl[order], "pos": tok_pos[order]})
-    blocks = list(_make_stream_packer(BLOCK_SIZE, n_shards)(iter([tokens])))
-    postings_schema = to_arrow_schema(POSTINGS_SCHEMA)
-    postings = (
-        pa.Table.from_pandas(pd.concat(blocks, ignore_index=True), schema=postings_schema,
-                             preserve_index=False)
-        if blocks else postings_schema.empty_table()
-    )
-    write_parquet_file(postings, os.path.join(seg, "postings.parquet"))
+    order = np.lexsort((tok_pos, tok_doc, tok_doc % n_shards, tok_tid))
+    postings = _write_postings(seg, pd.DataFrame({"tid": tok_tid[order], "doc_id": tok_doc[order],
+                                                  "dl": tok_dl[order], "pos": tok_pos[order]}),
+                               n_shards)
     timings["postings"] = round(time.time() - _t, 2)
 
     _t = time.time()
     # term dictionary: df = number of docs holding the term (per-doc
-    # distinct), sorted by term (code-point order = Spark's UTF-8 order)
+    # distinct)
     codes, uniq = pd.factorize(
         np.fromiter((w for t in terms if t is not None for w in t), object, total))
     pairs = np.unique(np.repeat(np.arange(len(n_tok)), n_tok) * len(uniq) + codes)
     term_tid = np.zeros(len(uniq), dtype=np.int64)
     term_tid[codes] = tok_tid  # one hash per term
-    by_term = np.argsort(uniq, kind="stable")
-    term_dict = pa.table({
-        "term": pa.array(uniq[by_term], pa.string()),
-        "df": pa.array(np.bincount(pairs % max(len(uniq), 1), minlength=len(uniq))[by_term],
-                       pa.int64()),
-        "tid": pa.array(term_tid[by_term], pa.int64()),
-    })
-    write_parquet_file(term_dict, os.path.join(seg, "term_dict.parquet"))
+    _write_term_dict(seg, uniq, term_tid,
+                     np.bincount(pairs % max(len(uniq), 1), minlength=len(uniq)))
     timings["term_dict"] = round(time.time() - _t, 2)
 
     return _write_manifest(
@@ -552,17 +599,180 @@ def build_segment_local(
         doc_id_min=int(doc_id.min()),
         doc_id_max=int(doc_id.max()),
         term_count=len(np.unique(tok_tid)),
-        n_postings=pc.sum(postings.column("n_docs")).as_py() or 0,
-        postings_bytes=sum(
-            pc.sum(pc.binary_length(postings.column(c))).as_py() or 0
-            for c in ("docs_vb", "tfs_vb", "dls_vb", "pos_vb")
-        ),
+        **postings,
         n_shards=n_shards,
         block_size=BLOCK_SIZE,
         t0=t0,
         phases=timings,
         docs_schema=from_arrow_schema(docs.schema),
     )
+
+
+_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
+
+
+def merged_docs_schema(manifests: list[dict]) -> StructType | None:
+    """The docstore schema :func:`build_segment` writes when it rebuilds
+    the live docs of the segments of ``manifests``, taken from their
+    ``docs_schema``: ``doc_id``, the passthrough columns any of them
+    holds, ``dl``, each typed as Spark's union widens it (``timestamp_ntz``
+    with ``timestamp`` → ``timestamp``, an integer type with a wider one
+    → the wider). None when the segments' types differ in another way,
+    or when the result holds both timestamp kinds
+    (:func:`write_parquet_file` stores every timestamp column one way)."""
+    types: dict[str, object] = {}
+    for m in manifests:
+        for f in StructType.fromJson(m["docs_schema"]):
+            a, b = types.get(f.name, f.dataType), f.dataType
+            if a == b:
+                types[f.name] = a
+            elif {type(a), type(b)} == {TimestampNTZType, TimestampType}:
+                types[f.name] = TimestampType()
+            elif isinstance(a, _INTEGRAL) and isinstance(b, _INTEGRAL):
+                types[f.name] = max(a, b, key=lambda t: _INTEGRAL.index(type(t)))
+            else:
+                return None
+    if {TimestampNTZType, TimestampType} <= {type(t) for t in types.values()}:
+        return None
+    names = ["doc_id", *[c for c in PASSTHROUGH if c in types], "dl"]
+    return StructType([StructField(c, types[c]) for c in names])
+
+
+def merge_segments_local(
+    root: str,
+    sources: list[tuple[str, dict]],
+    tombstones: tuple[np.ndarray, np.ndarray],
+    docs_schema: StructType,
+    segment_ids: list[int | str],
+    n_shards: int = 8,
+    session_tz: str = "UTC",
+    extra_manifest: dict | None = None,
+) -> list[dict]:
+    """Write the live docs of the segments ``sources`` (``(segment dir,
+    manifest)`` pairs) as the new segments ``segment_ids`` of the
+    generation ``root``, on the driver: no Spark job and no re-analysis.
+    A live doc goes to ``segment_ids[doc_id % len(segment_ids)]``, as
+    :func:`build_index` splits a rebuild. Returns their manifests.
+
+    ``tombstones`` is ``read_tombstones``' pair (doc ids sorted, each
+    doc's max ``upto_seg``): a doc of segment s is dead when its
+    ``upto_seg`` ≥ s. The docstore keeps the live rows, cast to
+    ``docs_schema`` (:func:`merged_docs_schema`; an NTZ source read into a
+    ``timestamp`` column is placed in ``session_tz``, as Spark's cast
+    does). The postings are decoded, their live token rows re-packed by
+    the build's packer with shards re-derived as ``doc_id % n_shards``,
+    and each term dictionary row keeps its source ``(term, tid)`` with
+    ``df`` = the term's live posting count, dropping terms left with
+    none. Same rows, types and manifest fields as :func:`build_segment`
+    over the same live docs, except that ``term_count`` is exact and each
+    parquet dir holds one file."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from .codec import unpack_blocks_batch, unpack_positions_batch
+
+    t0 = time.time()
+    t_doc, t_upto = tombstones
+
+    def live(doc_id: np.ndarray, seg: int) -> np.ndarray:
+        if not len(t_doc):
+            return np.ones(len(doc_id), dtype=bool)
+        i = np.minimum(np.searchsorted(t_doc, doc_id), len(t_doc) - 1)
+        return (t_doc[i] != doc_id) | (t_upto[i] < seg)
+
+    target = to_arrow_schema(docs_schema)
+
+    def live_docs(path: str, m: dict):
+        seg = int(m["segment_id"])
+        src = {f.name: f.dataType for f in StructType.fromJson(m["docs_schema"])}
+        d = pq.read_table(os.path.join(path, "docs.parquet"), columns=[c for c in target.names if c in src])
+        d = d.filter(pa.array(live(d.column("doc_id").to_numpy().astype(np.int64), seg)))
+        cols = []
+        for f in target:
+            if f.name not in src:
+                cols.append(pa.nulls(d.num_rows, f.type))
+                continue
+            c = d.column(f.name)
+            if isinstance(src[f.name], TimestampNTZType) and f.type.tz is not None:
+                c = pc.assume_timezone(c, session_tz)
+            cols.append(c.cast(f.type))
+        return pa.table(cols, schema=target)
+
+    def live_postings(path: str, m: dict):
+        """(tid, doc_id, dl, tf) of each live posting and the postings'
+        positions, flat."""
+        p = pq.read_table(os.path.join(path, "postings.parquet"),
+                          columns=["tid", "docs_vb", "tfs_vb", "dls_vb", "pos_vb"]).combine_chunks()
+        if not p.num_rows:
+            return [np.empty(0, np.int64)] * 4 + [np.empty(0, np.uint64)]
+        doc_ids, tfs, dls, counts = unpack_blocks_batch(
+            *(p.column(c).chunk(0) for c in ("docs_vb", "tfs_vb", "dls_vb")))
+        doc_ids, tfs = doc_ids.astype(np.int64), tfs.astype(np.int64)
+        pos, _ = unpack_positions_batch(p.column("pos_vb").chunk(0), tfs)
+        ok = live(doc_ids, int(m["segment_id"]))
+        return (np.repeat(p.column("tid").to_numpy(), counts)[ok], doc_ids[ok],
+                dls[ok].astype(np.int64), tfs[ok], pos[np.repeat(ok, tfs)])
+
+    docs = pa.concat_tables([live_docs(*s) for s in sources])
+    p_tid, p_doc, p_dl, p_tf, flat = (np.concatenate(a) for a in zip(
+        *[live_postings(*s) for s in sources]))
+    p_start = np.cumsum(p_tf) - p_tf  # each posting's positions: one run of ``flat``
+    terms = pa.concat_tables([pq.read_table(os.path.join(path, "term_dict.parquet"),
+                                            columns=["term", "tid"]) for path, _ in sources])
+    dict_terms, first = np.unique(terms.column("term").to_numpy(), return_index=True)
+    dict_tids = terms.column("tid").to_numpy()[first]
+    t_read = time.time() - t0
+
+    doc_all = docs.column("doc_id").to_numpy().astype(np.int64)
+    manifests = []
+    for k, segment_id in enumerate(segment_ids):
+        seg = segment_dir(root, segment_id)
+        shutil.rmtree(seg, ignore_errors=True)  # a crashed attempt's partial dir
+        _t = time.time()
+        dk = docs.filter(pa.array(doc_all % len(segment_ids) == k))
+        write_parquet_file(dk, os.path.join(seg, "docs.parquet"))
+        timings = {"docstore": round(time.time() - _t + t_read, 2)}
+
+        _t = time.time()
+        sel = np.flatnonzero(p_doc % len(segment_ids) == k)
+        sel = sel[np.lexsort((p_doc[sel], p_doc[sel] % n_shards, p_tid[sel]))]
+        tf = p_tf[sel]
+        tok = np.repeat(p_start[sel] - (np.cumsum(tf) - tf), tf) + np.arange(int(tf.sum()))
+        postings = _write_postings(seg, pd.DataFrame({
+            "tid": np.repeat(p_tid[sel], tf), "doc_id": np.repeat(p_doc[sel], tf),
+            "dl": np.repeat(p_dl[sel], tf), "pos": flat[tok],
+        }), n_shards)
+        timings["postings"] = round(time.time() - _t, 2)
+
+        _t = time.time()
+        live_tids, dfs = np.unique(p_tid[sel], return_counts=True)
+        j = np.minimum(np.searchsorted(live_tids, dict_tids), max(len(live_tids) - 1, 0))
+        hit = live_tids[j] == dict_tids if len(live_tids) else np.zeros(len(dict_tids), bool)
+        _write_term_dict(seg, dict_terms[hit], dict_tids[hit], dfs[j[hit]])
+        timings["term_dict"] = round(time.time() - _t, 2)
+
+        ids = dk.column("doc_id")
+        manifests.append(_write_manifest(
+            seg,
+            segment_id,
+            n_docs=dk.num_rows,
+            sum_dl=pc.sum(dk.column("dl")).as_py() or 0,
+            doc_id_min=pc.min(ids).as_py(),
+            doc_id_max=pc.max(ids).as_py(),
+            term_count=len(live_tids),
+            **postings,
+            n_shards=n_shards,
+            block_size=BLOCK_SIZE,
+            t0=t0,
+            phases=timings,
+            docs_schema=docs_schema,
+            extra=extra_manifest,
+        ))
+    return manifests
 
 
 def build_index(

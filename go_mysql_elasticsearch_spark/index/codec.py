@@ -113,6 +113,14 @@ def vb_decode_concat(
 
 
 def _concat_bufs(bufs) -> tuple[np.ndarray, np.ndarray]:
+    """(concatenated bytes, per-buffer lengths) of a sequence of byte
+    buffers; a null-free pyarrow binary array is viewed in place, its
+    data buffer already being the concatenation."""
+    if hasattr(bufs, "buffers"):
+        _, offsets, data = bufs.buffers()
+        offs = np.frombuffer(offsets, np.int32)[bufs.offset:bufs.offset + len(bufs) + 1]
+        data = np.frombuffer(data, np.uint8) if data is not None else np.empty(0, np.uint8)
+        return data[offs[0]:offs[-1]], np.diff(offs).astype(np.int64)
     joined = b"".join(bufs)
     lens = np.fromiter((len(x) for x in bufs), dtype=np.int64, count=len(bufs))
     return np.frombuffer(joined, dtype=np.uint8), lens

@@ -60,6 +60,28 @@ _SCHEMAS = {
 }
 
 
+def read_tombstones(root: str, max_rows: int | None = None) -> tuple[np.ndarray, np.ndarray] | None:
+    """The tombstones of the generation ``root`` as two int64 arrays,
+    doc ids sorted and each doc's max ``upto_seg``, read with pyarrow and
+    max-merged in numpy: no Spark job. Empty arrays when there are none;
+    None when the table holds more than ``max_rows`` raw rows (counted
+    from parquet metadata)."""
+    p = os.path.join(root, "tombstones.parquet")
+    if not glob.glob(os.path.join(p, "*.parquet")):
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    import pyarrow.dataset as ds
+
+    d = ds.dataset(p, format="parquet")
+    if max_rows is not None and d.count_rows() > max_rows:
+        return None
+    t = d.to_table(columns=["doc_id", "upto_seg"])
+    doc = t.column("doc_id").to_numpy().astype(np.int64)
+    upto = t.column("upto_seg").to_numpy().astype(np.int64)
+    order = np.lexsort((-upto, doc))  # per doc, max upto_seg first
+    docs, first = np.unique(doc[order], return_index=True)
+    return docs, upto[order][first]
+
+
 class IndexReader:
     """Read view of one index, pinned at open.
 
@@ -552,19 +574,11 @@ class IndexReader:
         set over the threshold pays a separate ``count()``."""
         if self._tomb_count is not None:
             return
-        p = os.path.join(self.root, "tombstones.parquet")
-        if glob.glob(os.path.join(p, "*.parquet")):
-            import pyarrow.dataset as ds
-
-            d = ds.dataset(p, format="parquet")
-            if d.count_rows() <= self.TOMBSTONE_DICT_MAX:
-                t = d.to_table(columns=["doc_id", "upto_seg"])
-                doc, upto = t.column("doc_id").to_numpy(), t.column("upto_seg").to_numpy()
-                order = np.lexsort((-upto.astype(np.int64), doc))  # per doc, max upto_seg first
-                docs, first = np.unique(doc[order], return_index=True)
-                self._tomb_cache = dict(zip(docs.tolist(), upto[order][first].tolist()))
-                self._tomb_count = len(self._tomb_cache)
-                return
+        arrays = read_tombstones(self.root, self.TOMBSTONE_DICT_MAX)
+        if arrays is not None:
+            self._tomb_cache = dict(zip(arrays[0].tolist(), arrays[1].tolist()))
+            self._tomb_count = len(self._tomb_cache)
+            return
         t = self.tombstones()
         rows = t.limit(self.TOMBSTONE_DICT_MAX + 1).collect() if t is not None else []
         if len(rows) <= self.TOMBSTONE_DICT_MAX:

@@ -102,17 +102,19 @@ def test_insert_only_batches_write_no_tombstones(spark, tmp_path):
     assert {x["doc_id"]: x["text"] for x in rows}[0] == "alpha reborn"
 
 
-@pytest.mark.parametrize("seed,cap", [
-    pytest.param(11, None, id="11"),
-    pytest.param(29, None, id="29"),
-    pytest.param(47, None, id="47"),
+@pytest.mark.parametrize("seed,caps", [
+    pytest.param(11, {}, id="11"),
+    pytest.param(29, {}, id="29"),
+    pytest.param(47, {}, id="47"),
     # every batch on apply_changes' Spark build, on the seed whose
     # update;update batch once duplicated a doc there
-    pytest.param(47, 0, id="47-spark-build"),
+    pytest.param(47, {"DRIVER_BUILD_MAX_EVENTS": 0}, id="47-spark-build"),
+    # every merge, forcemerge and compact on the Spark rebuild
+    pytest.param(11, {"DRIVER_MERGE_MAX_TOKENS": 0}, id="11-spark-merge"),
 ])
-def test_random_cdc_sequences_match_dict_model(spark, tmp_path, monkeypatch, seed, cap):
-    if cap is not None:
-        monkeypatch.setattr(incremental, "DRIVER_BUILD_MAX_EVENTS", cap)
+def test_random_cdc_sequences_match_dict_model(spark, tmp_path, monkeypatch, seed, caps):
+    for name, cap in caps.items():
+        monkeypatch.setattr(incremental, name, cap)
     rng = random.Random(seed)
     idx = str(tmp_path / f"model_idx_{seed}")
     model = {i: _text(rng) for i in range(12)}

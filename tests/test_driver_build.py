@@ -13,6 +13,7 @@ import shutil
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -102,6 +103,11 @@ def test_driver_build_equals_spark_build(spark, base, tmp_path, monkeypatch):
         b = _rows(spark, os.path.join(segment_dir(via_driver, 1), name))
         assert a[0] == b[0], name
         assert a[1] == b[1], name
+        # the files themselves share one Arrow schema, nullability and
+        # timestamp encoding included, so pyarrow can concatenate them
+        a, b = (pq.read_table(os.path.join(segment_dir(d, 1), name)).schema.remove_metadata()
+                for d in (via_spark, via_driver))
+        assert a == b, name
         assert os.path.exists(os.path.join(segment_dir(via_driver, 1), name, "_SUCCESS"))
     tomb = [_rows(spark, os.path.join(d, "tombstones.parquet")) for d in (via_spark, via_driver)]
     assert tomb[0] == tomb[1]
