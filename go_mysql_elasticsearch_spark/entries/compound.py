@@ -362,14 +362,6 @@ def q_explain(spark, sf_dir):
     return row.select("term", "tf", "df", "idf", "tfpart")
 
 
-def _topk_sql(body_terms, select_expr, extra_joins="", where="", k=10):
-    return (
-        f"WITH {bm25_ctes(body_terms)} "
-        f"SELECT doc_id, {select_expr} AS score FROM persc {extra_joins} "
-        f"{where} GROUP BY doc_id ORDER BY score DESC, doc_id ASC LIMIT {k}"
-    )
-
-
 _R = 6  # ROUND_DIGITS in SQL
 
 

@@ -27,18 +27,19 @@ Scale notes (the 10^12-doc story):
 - The only Python in the build is the block packer (Arrow-batched,
   numpy-vectorized); tokenize/explode stay whole-stage-codegen JVM.
 
-A second writer, ``build_segment_local``, builds a small change batch
-(``streaming.incremental.apply_changes``) on the driver with no Spark
-job: the batch arrives already tokenized and hashed by the same JVM
-expressions, the same packer runs over its sorted token rows, and
-pyarrow writes the same files and column types. A third writer,
-``merge_segments_local``, serves ``compact`` and ``merge_segments`` on
-small sources: it reads their segment files with pyarrow, decodes the
-postings, drops the versions the tombstones kill and re-packs the live
-token rows with the same packer, so nothing is re-analyzed and no Spark
-job runs. All three commit a segment through ``_write_manifest``, which
-also records the docstore schema so readers never infer it, and write
-the term dictionary with Spark's column types and nullability.
+Small segments are written on the driver instead, with no Spark job,
+by one writer (``_write_segment_local``) with two callers.
+``build_segment_local`` builds a small change batch
+(``streaming.incremental.apply_changes``) that arrives already tokenized
+and hashed by the same JVM expressions; ``merge_segments_local`` serves
+``compact`` and ``merge_segments`` on small sources by decoding their
+postings and dropping the versions the tombstones kill, so nothing is
+re-analyzed. Each hands the writer a pyarrow docstore, sorted token rows
+and its ``(term, tid)`` pairs; the writer runs the same packer, writes
+the same files and column types, and derives the manifest counters and
+each term's ``df`` from what it wrote. Every segment, Spark-built or
+not, is committed by ``_write_manifest``, which also records the
+docstore schema so readers never infer it.
 """
 
 from __future__ import annotations
@@ -439,9 +440,10 @@ def build_segment(
 def _write_manifest(seg: str, segment_id: int | str, *, t0: float, docs_schema: StructType,
                     extra: dict | None = None, **stats) -> dict:
     """Commit a segment: write its manifest atomically, last, after every
-    parquet dir under ``seg`` is complete (the one manifest writer of both
-    builds). ``docs_schema`` is recorded with every field nullable, as a
-    parquet read returns it, so the reader opens ``docs.parquet`` without
+    parquet dir under ``seg`` is complete (the one manifest writer of
+    :func:`build_segment` and :func:`_write_segment_local`).
+    ``docs_schema`` is recorded with every field nullable, as a parquet
+    read returns it, so the reader opens ``docs.parquet`` without
     inferring its schema."""
     nbytes = sum(
         os.path.getsize(os.path.join(r, fn))
@@ -489,14 +491,13 @@ def write_parquet_file(table, path: str, name: str = "part-00000.parquet") -> No
 _PACK_BATCH = 1 << 20
 
 
-def _write_postings(seg: str, tokens: pd.DataFrame, n_shards: int) -> dict:
+def _write_postings(seg: str, tokens: pd.DataFrame, n_shards: int):
     """Pack token rows ``(tid, doc_id, dl, pos)`` sorted by (tid, shard,
     doc_id, pos) with the build's packer and write them as the segment's
-    ``postings.parquet``; returns the manifest's postings counters. The
-    packer takes the rows in batches of ``_PACK_BATCH``, as it takes
-    Arrow batches in the Spark build, so its temporaries stay bounded."""
+    ``postings.parquet``; returns the written table. The packer takes the
+    rows in batches of ``_PACK_BATCH``, as it takes Arrow batches in the
+    Spark build, so its temporaries stay bounded."""
     import pyarrow as pa
-    import pyarrow.compute as pc
     from pyspark.sql.pandas.types import to_arrow_schema
 
     blocks = list(_make_stream_packer(BLOCK_SIZE, n_shards)(
@@ -507,28 +508,75 @@ def _write_postings(seg: str, tokens: pd.DataFrame, n_shards: int) -> dict:
         if blocks else schema.empty_table()
     )
     write_parquet_file(postings, os.path.join(seg, "postings.parquet"))
-    return {
-        "n_postings": pc.sum(postings.column("n_docs")).as_py() or 0,
-        "postings_bytes": sum(
-            pc.sum(pc.binary_length(postings.column(c))).as_py() or 0
-            for c in ("docs_vb", "tfs_vb", "dls_vb", "pos_vb")
-        ),
-    }
+    return postings
 
 
-def _write_term_dict(seg: str, terms: np.ndarray, tids: np.ndarray, dfs: np.ndarray) -> None:
-    """Write the segment's ``term_dict.parquet`` sorted by term (code-point
-    order = Spark's UTF-8 order), with the Spark build's types and
-    nullability (``df`` and ``tid`` not null)."""
+def _write_segment_local(root: str, segment_id: int | str, docs, tokens: pd.DataFrame,
+                         terms: np.ndarray, tids: np.ndarray, n_shards: int,
+                         docs_schema: StructType, t0: float, extra: dict | None = None) -> dict:
+    """Write segment ``segment_id`` of ``root`` on the driver and commit it;
+    the one writer of :func:`build_segment_local` and
+    :func:`merge_segments_local`. ``docs`` is the docstore as a pyarrow
+    table (``doc_id``, passthrough columns, ``dl``) of Spark type
+    ``docs_schema``, ``tokens`` its token rows sorted by (tid, shard,
+    doc_id, pos), and ``terms``/``tids`` the segment's ``(term, tid)``
+    pairs, one per term. Every manifest counter comes from what is
+    written: a term's ``df`` is its posting count in the packed output,
+    and a pair whose tid has no posting is left out of the dictionary.
+    Same files, column types and manifest fields as :func:`build_segment`
+    over the same docs, except that ``term_count`` is exact and each
+    parquet dir holds one file. The ``docstore`` phase counts from
+    ``t0``, so it holds the caller's read and sort."""
+    import shutil
+
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    by_term = np.argsort(terms, kind="stable")
+    seg = segment_dir(root, segment_id)
+    shutil.rmtree(seg, ignore_errors=True)  # a crashed attempt's partial dir
+    write_parquet_file(docs, os.path.join(seg, "docs.parquet"))
+    phases = {"docstore": round(time.time() - t0, 2)}
+
+    _t = time.time()
+    postings = _write_postings(seg, tokens, n_shards)
+    phases["postings"] = round(time.time() - _t, 2)
+
+    _t = time.time()
+    n_docs = postings.column("n_docs").to_numpy()
+    live_tids, inv = np.unique(postings.column("tid").to_numpy(), return_inverse=True)
+    dfs = np.bincount(inv, weights=n_docs, minlength=len(live_tids)).astype(np.int64)
+    hit = np.isin(tids, live_tids)
+    terms, tids = terms[hit], tids[hit]
+    by_term = np.argsort(terms, kind="stable")  # code-point order = Spark's UTF-8 order
+    terms, tids = terms[by_term], tids[by_term]
+    # the Spark build's types and nullability (``df`` and ``tid`` not null)
     write_parquet_file(pa.table(
-        [pa.array(terms[by_term], pa.string()), pa.array(dfs[by_term], pa.int64()),
-         pa.array(tids[by_term], pa.int64())],
+        [pa.array(terms, pa.string()), pa.array(dfs[np.searchsorted(live_tids, tids)], pa.int64()),
+         pa.array(tids, pa.int64())],
         schema=pa.schema([("term", pa.string()), pa.field("df", pa.int64(), nullable=False),
                           pa.field("tid", pa.int64(), nullable=False)]),
     ), os.path.join(seg, "term_dict.parquet"))
+    phases["term_dict"] = round(time.time() - _t, 2)
+
+    ids = docs.column("doc_id")
+    return _write_manifest(
+        seg,
+        segment_id,
+        n_docs=docs.num_rows,
+        sum_dl=pc.sum(docs.column("dl")).as_py() or 0,
+        doc_id_min=pc.min(ids).as_py(),
+        doc_id_max=pc.max(ids).as_py(),
+        term_count=len(live_tids),
+        n_postings=int(n_docs.sum()),
+        postings_bytes=sum(pc.sum(pc.binary_length(postings.column(c))).as_py() or 0
+                           for c in ("docs_vb", "tfs_vb", "dls_vb", "pos_vb")),
+        n_shards=n_shards,
+        block_size=BLOCK_SIZE,
+        t0=t0,
+        phases=phases,
+        docs_schema=docs_schema,
+        extra=extra,
+    )
 
 
 def build_segment_local(
@@ -540,9 +588,7 @@ def build_segment_local(
     n_shards: int = 8,
 ) -> dict:
     """Build one segment on the driver from an analyzed batch small
-    enough to hold there: no Spark job. Same files, column types and
-    manifest fields as :func:`build_segment` over the same docs, except
-    that ``term_count`` is exact and each parquet dir holds one file.
+    enough to hold there: no Spark job.
 
     ``docs`` is the docstore as a pyarrow table (``doc_id``, the
     passthrough columns, ``dl`` int32) whose types map to Spark's one to
@@ -550,61 +596,28 @@ def build_segment_local(
     xxhash64 ids, as ``tokens_col`` and ``F.xxhash64`` give them with the
     index's ``token_pattern``, or None for a null text. One tokenize
     feeds all three outputs: the token rows, sorted by (tid, shard,
-    doc_id, pos), go through the build's packer, and the term dictionary
-    counts each doc's distinct terms."""
-    import shutil
+    doc_id, pos), and the batch's ``(term, tid)`` pairs go to
+    :func:`_write_segment_local`."""
+    from itertools import chain
 
-    import pyarrow.compute as pc
     from pyspark.sql.pandas.types import from_arrow_schema
 
     t0 = time.time()
     write_settings(index_dir, None)
-    seg = segment_dir(index_dir, segment_id)
-    shutil.rmtree(seg, ignore_errors=True)  # a crashed attempt's partial dir
-    timings: dict[str, float] = {}
-    write_parquet_file(docs, os.path.join(seg, "docs.parquet"))
-    timings["docstore"] = round(time.time() - t0, 2)
-
-    _t = time.time()
     doc_id = docs.column("doc_id").to_numpy().astype(np.int64)
     n_tok = np.fromiter((len(t) if t is not None else 0 for t in tids), np.int64, len(tids))
     total = int(n_tok.sum())
-    tok_tid = np.fromiter((h for t in tids if t is not None for h in t), np.int64, total)
+    tok_tid = np.fromiter(chain.from_iterable(filter(None, tids)), np.int64, total)
     tok_doc = np.repeat(doc_id, n_tok)
-    tok_dl = np.repeat(n_tok, n_tok)
     tok_pos = np.arange(total) - np.repeat(np.cumsum(n_tok) - n_tok, n_tok)
     order = np.lexsort((tok_pos, tok_doc, tok_doc % n_shards, tok_tid))
-    postings = _write_postings(seg, pd.DataFrame({"tid": tok_tid[order], "doc_id": tok_doc[order],
-                                                  "dl": tok_dl[order], "pos": tok_pos[order]}),
-                               n_shards)
-    timings["postings"] = round(time.time() - _t, 2)
-
-    _t = time.time()
-    # term dictionary: df = number of docs holding the term (per-doc
-    # distinct)
-    codes, uniq = pd.factorize(
-        np.fromiter((w for t in terms if t is not None for w in t), object, total))
-    pairs = np.unique(np.repeat(np.arange(len(n_tok)), n_tok) * len(uniq) + codes)
-    term_tid = np.zeros(len(uniq), dtype=np.int64)
-    term_tid[codes] = tok_tid  # one hash per term
-    _write_term_dict(seg, uniq, term_tid,
-                     np.bincount(pairs % max(len(uniq), 1), minlength=len(uniq)))
-    timings["term_dict"] = round(time.time() - _t, 2)
-
-    return _write_manifest(
-        seg,
-        segment_id,
-        n_docs=docs.num_rows,
-        sum_dl=pc.sum(docs.column("dl")).as_py() or 0,
-        doc_id_min=int(doc_id.min()),
-        doc_id_max=int(doc_id.max()),
-        term_count=len(np.unique(tok_tid)),
-        **postings,
-        n_shards=n_shards,
-        block_size=BLOCK_SIZE,
-        t0=t0,
-        phases=timings,
-        docs_schema=from_arrow_schema(docs.schema),
+    pairs = dict(zip(chain.from_iterable(filter(None, terms)), tok_tid.tolist()))
+    return _write_segment_local(
+        index_dir, segment_id, docs,
+        pd.DataFrame({"tid": tok_tid[order], "doc_id": tok_doc[order],
+                      "dl": np.repeat(n_tok, n_tok)[order], "pos": tok_pos[order]}),
+        np.array(list(pairs), dtype=object), np.fromiter(pairs.values(), np.int64, len(pairs)),
+        n_shards, from_arrow_schema(docs.schema), t0,
     )
 
 
@@ -659,15 +672,10 @@ def merge_segments_local(
     ``upto_seg`` ≥ s. The docstore keeps the live rows, cast to
     ``docs_schema`` (:func:`merged_docs_schema`; an NTZ source read into a
     ``timestamp`` column is placed in ``session_tz``, as Spark's cast
-    does). The postings are decoded, their live token rows re-packed by
-    the build's packer with shards re-derived as ``doc_id % n_shards``,
-    and each term dictionary row keeps its source ``(term, tid)`` with
-    ``df`` = the term's live posting count, dropping terms left with
-    none. Same rows, types and manifest fields as :func:`build_segment`
-    over the same live docs, except that ``term_count`` is exact and each
-    parquet dir holds one file."""
-    import shutil
-
+    does). The postings are decoded and each target's live token rows,
+    sorted, go with the sources' ``(term, tid)`` pairs to
+    :func:`_write_segment_local`, so nothing is re-analyzed and a term
+    left with no live posting drops out of the dictionary."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -725,52 +733,20 @@ def merge_segments_local(
                                             columns=["term", "tid"]) for path, _ in sources])
     dict_terms, first = np.unique(terms.column("term").to_numpy(), return_index=True)
     dict_tids = terms.column("tid").to_numpy()[first]
-    t_read = time.time() - t0
 
     doc_all = docs.column("doc_id").to_numpy().astype(np.int64)
     manifests = []
     for k, segment_id in enumerate(segment_ids):
-        seg = segment_dir(root, segment_id)
-        shutil.rmtree(seg, ignore_errors=True)  # a crashed attempt's partial dir
-        _t = time.time()
-        dk = docs.filter(pa.array(doc_all % len(segment_ids) == k))
-        write_parquet_file(dk, os.path.join(seg, "docs.parquet"))
-        timings = {"docstore": round(time.time() - _t + t_read, 2)}
-
-        _t = time.time()
+        t_k = time.time() if k else t0
         sel = np.flatnonzero(p_doc % len(segment_ids) == k)
         sel = sel[np.lexsort((p_doc[sel], p_doc[sel] % n_shards, p_tid[sel]))]
         tf = p_tf[sel]
         tok = np.repeat(p_start[sel] - (np.cumsum(tf) - tf), tf) + np.arange(int(tf.sum()))
-        postings = _write_postings(seg, pd.DataFrame({
-            "tid": np.repeat(p_tid[sel], tf), "doc_id": np.repeat(p_doc[sel], tf),
-            "dl": np.repeat(p_dl[sel], tf), "pos": flat[tok],
-        }), n_shards)
-        timings["postings"] = round(time.time() - _t, 2)
-
-        _t = time.time()
-        live_tids, dfs = np.unique(p_tid[sel], return_counts=True)
-        j = np.minimum(np.searchsorted(live_tids, dict_tids), max(len(live_tids) - 1, 0))
-        hit = live_tids[j] == dict_tids if len(live_tids) else np.zeros(len(dict_tids), bool)
-        _write_term_dict(seg, dict_terms[hit], dict_tids[hit], dfs[j[hit]])
-        timings["term_dict"] = round(time.time() - _t, 2)
-
-        ids = dk.column("doc_id")
-        manifests.append(_write_manifest(
-            seg,
-            segment_id,
-            n_docs=dk.num_rows,
-            sum_dl=pc.sum(dk.column("dl")).as_py() or 0,
-            doc_id_min=pc.min(ids).as_py(),
-            doc_id_max=pc.max(ids).as_py(),
-            term_count=len(live_tids),
-            **postings,
-            n_shards=n_shards,
-            block_size=BLOCK_SIZE,
-            t0=t0,
-            phases=timings,
-            docs_schema=docs_schema,
-            extra=extra_manifest,
+        manifests.append(_write_segment_local(
+            root, segment_id, docs.filter(pa.array(doc_all % len(segment_ids) == k)),
+            pd.DataFrame({"tid": np.repeat(p_tid[sel], tf), "doc_id": np.repeat(p_doc[sel], tf),
+                          "dl": np.repeat(p_dl[sel], tf), "pos": flat[tok]}),
+            dict_terms, dict_tids, n_shards, docs_schema, t_k, extra_manifest,
         ))
     return manifests
 

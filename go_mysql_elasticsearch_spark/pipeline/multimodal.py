@@ -1395,15 +1395,3 @@ def video_frame_features(
             yield pd.DataFrame({"doc_id": out_id, "frame_no": out_no, "mean_gray": out_mg})
 
     return df.select(id_col, bin_col).mapInPandas(run, schema=VIDEO_FEAT_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, bin_col: str = "video", every_n: int = 30) -> DataFrame:
-    """Video frame-sampling *plan*: rows (doc_id, frame_no) exploded
-    from metadata — the decode itself is the stubbed kernel. Shows the
-    partitioning story: explode AFTER repartitioning by doc so one
-    giant video cannot skew a task."""
-    return (
-        df.select("doc_id", F.length(bin_col).alias("n_bytes"))
-        .withColumn("n_frames", (F.col("n_bytes") / 1000).cast("int"))
-        .select("doc_id", F.explode(F.sequence(F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_n))).alias("frame_no"))
-    )

@@ -27,12 +27,14 @@ Collection stats (N, avgdl, df) keep counting tombstoned postings until
 ``compact()`` rewrites the index from its live docs — the same
 smeared-stats behavior ES/Lucene exhibit between merges; compaction
 restores exactness (tested invariant: compacted == fresh build over the
-final doc set). ``compact`` and ``merge_segments`` pick their plan by
-size the same way: sources of at most ``DRIVER_MERGE_MAX_TOKENS`` tokens
-are merged on the driver (``merge_segments_local``: their live postings
-are decoded, the dead versions dropped and the rest re-packed, with no
-re-analysis and no Spark job); larger ones are re-tokenized from the
-live docstore by the Spark build.
+final doc set). ``compact`` and ``merge_segments`` both rewrite live
+docs through ``_rebuild_live``, which picks the plan by size the same
+way: sources of at most ``DRIVER_MERGE_MAX_TOKENS`` tokens are merged on
+the driver (``merge_segments_local``: their live postings are decoded,
+the dead versions dropped and the rest re-packed by the same driver
+writer as ``build_segment_local``, with no re-analysis and no Spark
+job); larger ones are re-tokenized from the live docstore by the Spark
+build.
 
 The streaming variant wires the same ``apply_changes`` into Structured
 Streaming ``foreachBatch`` with a checkpointLocation — the binlog
@@ -279,21 +281,35 @@ def _apply_rows(spark: SparkSession, index_dir: str, cols: list[str], rows: list
 DRIVER_MERGE_MAX_TOKENS = 5_000_000
 
 
-def _merge_local(spark: SparkSession, reader: IndexReader, sources: list[dict], root: str,
-                 segment_ids: list, n_shards: int, extra: dict | None = None) -> list[dict] | None:
-    """``merge_segments_local`` of the reader's served segments
-    ``sources`` into ``segment_ids`` under ``root``, or None (the caller
-    takes the Spark rebuild) when they hold more than
-    DRIVER_MERGE_MAX_TOKENS tokens or their docstore types need more
-    than ``merged_docs_schema``'s widening."""
+def _rebuild_live(spark: SparkSession, reader: IndexReader, sources: list[dict], root: str,
+                  segment_ids: list, n_shards: int, extra: dict | None = None) -> list[dict]:
+    """Write the live docs of the reader's served segments ``sources`` as
+    the new segments ``segment_ids`` under ``root`` (a live doc goes to
+    ``segment_ids[doc_id % len(segment_ids)]``) with the reader's
+    settings; returns their manifests. Sources of at most
+    DRIVER_MERGE_MAX_TOKENS tokens whose docstore types
+    ``merged_docs_schema`` can widen are re-packed on the driver
+    (``merge_segments_local``); others are re-tokenized from the live
+    docstore by ``build_segment``, one Spark build per target."""
+    write_settings(root, reader.settings)
     schema = merged_docs_schema(sources)
-    if schema is None or sum(m["sum_dl"] for m in sources) > DRIVER_MERGE_MAX_TOKENS:
-        return None
-    return merge_segments_local(
-        root, [(segment_dir(reader.root, m["segment_id"]), m) for m in sources],
-        read_tombstones(reader.root), schema, segment_ids, n_shards,
-        session_tz=spark.conf.get("spark.sql.session.timeZone"), extra_manifest=extra,
-    )
+    if schema is not None and sum(m["sum_dl"] for m in sources) <= DRIVER_MERGE_MAX_TOKENS:
+        return merge_segments_local(
+            root, [(segment_dir(reader.root, m["segment_id"]), m) for m in sources],
+            read_tombstones(reader.root), schema, segment_ids, n_shards,
+            session_tz=spark.conf.get("spark.sql.session.timeZone"), extra_manifest=extra,
+        )
+    n = len(segment_ids)
+    live = (reader.docstore().where(F.col("segment").isin([str(m["segment_id"]) for m in sources]))
+            .drop("segment", "dl").cache())
+    try:
+        return [
+            build_segment(spark, live.where(F.pmod("doc_id", F.lit(n)) == k) if n > 1 else live,
+                          root, segment_id=s, n_shards=n_shards, extra_manifest=extra)
+            for k, s in enumerate(segment_ids)
+        ]
+    finally:
+        live.unpersist()
 
 
 def compact(
@@ -308,10 +324,8 @@ def compact(
     tombstones. (K1's byte-threshold bulker becomes segment-count /
     bytes policy at real scale — callers decide when to compact.) The
     live docs land in ``n_segments`` segments by ``doc_id %
-    n_segments``: re-packed from the served postings on the driver when
-    the index holds at most ``DRIVER_MERGE_MAX_TOKENS`` tokens,
-    otherwise re-tokenized from the docstore by the Spark build. Both
-    write the same files.
+    n_segments``, written by ``_rebuild_live`` (driver merge or Spark
+    rebuild, by size).
 
     ATOMIC generation swap (reference create-new-index-then-alias,
     river/river.go:111-128): the compacted index is built as a sibling
@@ -325,28 +339,20 @@ def compact(
     "after_pointer")."""
     import shutil
 
-    from ..index.build import build_index
-
     reader = IndexReader(spark, index_dir)
     old_root = reader.root
     cur_gen = None if old_root == index_dir else os.path.basename(old_root)
     new_n = (int(cur_gen.split("-")[1]) + 1) if cur_gen else 1
     new_gen = f"gen-{new_n:06d}"
 
-    # build the next generation OFF to the side, never over live dirs
+    # build the next generation OFF to the side, never over live dirs;
+    # it carries the reader's EFFECTIVE settings — otherwise live docs
+    # would be re-tokenized/scored with defaults while query-time analysis
+    # keeps using the custom analyzer (write_settings' "analyzer must
+    # never change silently" contract)
     tmp = os.path.join(index_dir, f".building-{new_gen}")
     shutil.rmtree(tmp, ignore_errors=True)
-    # carry the reader's EFFECTIVE settings into the new generation —
-    # otherwise live docs would be re-tokenized/scored with defaults
-    # while query-time analysis keeps using the custom analyzer
-    # (write_settings' "analyzer must never change silently" contract)
-    write_settings(tmp, reader.settings)
-    manifests = _merge_local(spark, reader, reader.manifests, tmp, list(range(n_segments)), n_shards)
-    if manifests is None:
-        live = reader.docstore().drop("segment", "dl").cache()
-        live.count()
-        manifests = build_index(spark, live, tmp, n_segments=n_segments, n_shards=n_shards)
-        live.unpersist()
+    manifests = _rebuild_live(spark, reader, reader.manifests, tmp, list(range(n_segments)), n_shards)
     gen_dir = os.path.join(index_dir, new_gen)
     shutil.rmtree(gen_dir, ignore_errors=True)  # stale from a prior crash
     os.replace(tmp, gen_dir)  # complete generation appears atomically
@@ -416,10 +422,8 @@ def merge_segments(
     scale this is how an incremental index stays query-efficient — a
     stream of small CDC segments merges up a tier at a time, each merge
     costing only the bytes of the segments it touches, never the whole
-    index (compact() is O(index); this is O(merged tier)). Sources of
-    at most ``DRIVER_MERGE_MAX_TOKENS`` tokens are re-packed on the
-    driver from their postings, larger ones re-tokenized by the Spark
-    build, as in ``compact``.
+    index (compact() is O(index); this is O(merged tier)). The merged
+    segment is written by ``_rebuild_live``, as in ``compact``.
 
     Crash safety without a generation swap: the merged segment's
     manifest (written ATOMICALLY, last) carries ``merged_from`` — the
@@ -445,25 +449,9 @@ def merge_segments(
         raise ValueError(f"cannot merge unknown/superseded segments: {missing}")
     new_seg = _next_segment_id(index_dir)
     sources = [m for m in reader.manifests if str(m["segment_id"]) in ids]
-    merged = _merge_local(spark, reader, sources, reader.root, [new_seg], n_shards,
-                          {"merged_from": ids})
-    if merged is not None:
-        manifest = merged[0]
-    else:
-        live = (
-            reader.docstore()
-            .where(F.col("segment").isin(ids))
-            .drop("segment", "dl")
-        )
-        manifest = build_segment(
-            spark,
-            live,
-            reader.root,
-            segment_id=new_seg,
-            n_shards=n_shards,
-            extra_manifest={"merged_from": ids},
-            settings=reader.settings,  # merged docs keep the index's analyzer
-        )
+    # merged docs keep the index's analyzer
+    manifest = _rebuild_live(spark, reader, sources, reader.root, [new_seg], n_shards,
+                             {"merged_from": ids})[0]
     if not _skip_gc:
         gc_superseded_segments(index_dir)
     return manifest

@@ -19,8 +19,22 @@ import numpy as np
 import pandas as pd
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
-from go_mysql_elasticsearch_spark.index.build import build_index, gen_root, segment_dir
+from go_mysql_elasticsearch_spark.index.build import (
+    build_index,
+    gen_root,
+    merged_docs_schema,
+    segment_dir,
+)
 from go_mysql_elasticsearch_spark.index.reader import IndexReader
 from go_mysql_elasticsearch_spark.streaming import incremental
 from go_mysql_elasticsearch_spark.streaming.incremental import (
@@ -180,3 +194,33 @@ def test_small_compact_and_merge_run_no_spark_job(spark, base, tmp_path):
     assert m["merged_from"] == ["1", "2", "3"] and n_jobs == 0
     ms, n_jobs = spark_jobs(spark, lambda: compact(spark, idx, n_segments=2, n_shards=2))
     assert len(ms) == 2 and n_jobs == 0
+
+
+def _manifest(**types):
+    return {"docs_schema": StructType([StructField(c, t) for c, t in types.items()]).jsonValue()}
+
+
+def test_merged_docs_schema_widens_like_spark_union():
+    """No Spark session: the schema comes from the manifests alone."""
+    got = merged_docs_schema([
+        _manifest(dl=IntegerType(), lang=StringType(), doc_id=IntegerType(),
+                  warc_ts=TimestampNTZType()),
+        _manifest(doc_id=LongType(), _parent=StringType(), text=StringType(),
+                  warc_ts=TimestampType(), dl=IntegerType()),
+    ])
+    assert got == StructType([
+        StructField("doc_id", LongType()), StructField("warc_ts", TimestampType()),
+        StructField("lang", StringType()), StructField("text", StringType()),
+        StructField("_parent", StringType()), StructField("dl", IntegerType()),
+    ])
+
+
+@pytest.mark.parametrize("manifests", [
+    [_manifest(doc_id=LongType(), lang=StringType(), dl=IntegerType()),
+     _manifest(doc_id=LongType(), lang=LongType(), dl=IntegerType())],
+    [_manifest(doc_id=LongType(), warc_ts=TimestampType(), _parent=TimestampNTZType(),
+               dl=IntegerType())],
+], ids=["string-long", "both-timestamp-kinds"])
+def test_merged_docs_schema_refuses_what_it_cannot_widen(manifests):
+    """None sends compact and merge_segments to the Spark rebuild."""
+    assert merged_docs_schema(manifests) is None
